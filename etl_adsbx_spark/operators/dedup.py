@@ -5,12 +5,15 @@ The reference has two distinct dedup semantics (SURVEY.md R21/R25):
 - *last-write-wins* within a batch: `ids.set(id, feat)` overwrites, so the
   last row per key in ingestion order survives (task.ts:136, 187);
 - *first-wins* at output: a `Set` guard keeps the first occurrence
-  (task.ts:215, 235-238, 244-247).
+  (task.ts:215, 235-238, 244-247). After last-wins the ids are already
+  unique, so the guard never drops a row; what it fixes is each id's
+  output position, which ``last_wins(first_as=...)`` and the includes
+  join emit as a column (pipeline.py) — no second dedup.
 
-Spark has no row order, so both take an explicit ``order_col`` (ingestion
-index, timestamp, …). Implementation is a single hash aggregation with
-``max_by``/``min_by`` — one shuffle on the key, map-side partial aggregation,
-no window sort. That is the scalable form: at 100 TB a window +
+Spark has no row order, so last-wins takes an explicit ``order_col``
+(ingestion index, timestamp, …). Implementation is a single hash
+aggregation with ``max_by`` — one shuffle on the key, map-side partial
+aggregation, no window sort. That is the scalable form: at 100 TB a window +
 ``row_number`` would sort every partition; ``max_by`` keeps one struct per
 key per partition before the shuffle.
 
@@ -28,26 +31,23 @@ from ..planprobe import pin, probe_step
 from ..functions.text import tokens as _text_tokens
 
 
-def _keyed_pick(df: DataFrame, keys: list[str], order_col: str | Column, agg_fn) -> DataFrame:
-    order = F.col(order_col) if isinstance(order_col, str) else order_col
-    others = [c for c in df.columns if c not in keys]
-    picked = df.groupBy(*keys).agg(agg_fn(F.struct(*others), order).alias("_row"))
-    return picked.select(*keys, *[F.col(f"_row.{c}").alias(c) for c in others])
-
-
-def last_wins(df: DataFrame, keys: list[str] | str, order_col: str | Column) -> DataFrame:
+def last_wins(df: DataFrame, keys: list[str] | str, order_col: str | Column,
+              first_as: str | None = None) -> DataFrame:
     """Keep the row with the greatest ``order_col`` per key — Map-upsert
     semantics (task.ts:136). Ties: max_by picks an arbitrary winner, so use
-    a total order (e.g. unique ingestion index)."""
+    a total order (e.g. unique ingestion index). ``first_as`` also emits
+    the key's least ``order_col`` under that name, in the same
+    aggregation: where a Map first inserted the key, which fixes its
+    iteration position while later upserts replace its value
+    (task.ts:242)."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    return _keyed_pick(df, keys, order_col, F.max_by)
-
-
-def first_wins(df: DataFrame, keys: list[str] | str, order_col: str | Column) -> DataFrame:
-    """Keep the row with the least ``order_col`` per key — output Set-guard
-    semantics (task.ts:235-238)."""
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    return _keyed_pick(df, keys, order_col, F.min_by)
+    order = F.col(order_col) if isinstance(order_col, str) else order_col
+    others = [c for c in df.columns if c not in keys]
+    aggs = [F.max_by(F.struct(*others), order).alias("_row")]
+    if first_as:
+        aggs.append(F.min(order).alias(first_as))
+    picked = df.groupBy(*keys).agg(*aggs)
+    return picked.select(*keys, "_row.*", *([first_as] if first_as else []))
 
 
 # ---------------------------------------------------------------------------

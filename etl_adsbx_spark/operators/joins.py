@@ -10,12 +10,15 @@ scale (a raw theta join is a nested-loop cross product).
 
 from __future__ import annotations
 
+import functools
 import re
+import weakref
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import normalize_key
+from ..schemas import POSITION
 
 #: Fixed-offset session timezones (no DST): calendar-interval stepping from a
 #: date_trunc origin stays on date_trunc boundaries under exactly these.
@@ -42,12 +45,54 @@ def _require_fixed_offset_tz(df: DataFrame, opname: str) -> None:
         )
 
 
+#: Includes side per includes DataFrame (see ``includes_join``); an entry
+#: goes when its DataFrame does.
+_INCLUDES_SIDES: weakref.WeakKeyDictionary[DataFrame, DataFrame] = weakref.WeakKeyDictionary()
+
+
+def _includes_side(includes: DataFrame) -> DataFrame:
+    side = _INCLUDES_SIDES.get(includes)
+    if side is None:
+        truthy_idx = lambda c: F.when(  # noqa: E731
+            F.col(c).isNotNull() & (F.col(c) != ""), F.col("_idx")
+        )
+        agg = (
+            includes.filter(
+                F.col("registration").isNotNull() & (F.col("registration") != "")
+            )
+            .groupBy(normalize_key("registration").alias("id"))
+            .agg(
+                F.min("_idx").alias(POSITION),
+                F.max_by(F.col("callsign"), truthy_idx("callsign")).alias("_inc_callsign"),
+                F.max_by(F.col("group"), truthy_idx("group")).alias("_inc_group"),
+            )
+        )
+        # from Arrow, createDataFrame builds a local relation: scanning it
+        # runs no Python worker, unlike a list of rows
+        local = includes.sparkSession.createDataFrame(agg.toArrow())
+        side = _INCLUDES_SIDES[includes] = F.broadcast(local)
+    return side
+
+
+@functools.cache
+def _enrichment() -> dict[str, Column]:
+    """Aircraft column → its enriched Column (R23/R24)."""
+    return {
+        # last truthy include.callsign overrides (task.ts:227-229);
+        # _inc_callsign is NULL when no include had a truthy callsign
+        "callsign": F.coalesce(F.col("_inc_callsign"), F.col("callsign")).alias("callsign"),
+        "metadata": F.col("metadata").withField(
+            "group", F.coalesce(F.col("_inc_group"), F.col("metadata.group"))
+        ).alias("metadata"),
+    }
+
+
 def includes_join(
     aircraft: DataFrame,
     includes: DataFrame,
 ) -> DataFrame:
     """The reference includes join + enrichment (task.ts:217-240, the
-    ADSBX_INCLUDES_FILTERING branch; R22-R24).
+    ADSBX_INCLUDES_FILTERING branch; R22-R25).
 
     Reference semantics, traced from task.ts:
 
@@ -58,45 +103,25 @@ def includes_join(
       (task.ts:227-233): a *truthy* callsign/group overwrites, so when
       several includes share a registration the LAST truthy value per field
       wins — while the Set guard (task.ts:235-238) pins the feature's output
-      position to the FIRST matching include.
+      position to the FIRST matching include, emitted as ``POSITION``.
     - non-matching aircraft drop (inner join ≡ the `ids.has(id)` gate).
 
     Spark form: pre-aggregate the includes to one row per key —
     ``min(_idx)`` for the first-match position, ``max_by(field, idx-if-
     truthy)`` for the last truthy override (max_by ignores NULL ordering
     keys, so rows with falsy fields never win) — then one broadcast inner
-    join. The dimension side is O(10²) rows: zero shuffle, and because it
-    is unique per key the join cannot fan out.
+    join on ``id``. Because the side is unique per key the join cannot fan
+    out, so ``aircraft`` unique per id gives output unique per id.
+
+    The side comes from configuration (task.ts:26-61) and is O(10²) rows,
+    so it is aggregated and collected once per ``includes`` DataFrame and
+    kept as a local relation: later calls with the same DataFrame plan no
+    aggregate and run no shuffle for it. ``includes`` is therefore read
+    once; pass a new DataFrame for a new includes list.
     """
-    truthy_idx = lambda c: F.when(  # noqa: E731
-        F.col(c).isNotNull() & (F.col(c) != ""), F.col("_idx")
-    )
-    inc = (
-        includes.filter(
-            F.col("registration").isNotNull() & (F.col("registration") != "")
-        )
-        .groupBy(normalize_key("registration").alias("_inc_key"))
-        .agg(
-            F.min("_idx").alias("_inc_idx"),
-            F.max_by(F.col("callsign"), truthy_idx("callsign")).alias("_inc_callsign"),
-            F.max_by(F.col("group"), truthy_idx("group")).alias("_inc_group"),
-        )
-    )
-    joined = aircraft.join(F.broadcast(inc), aircraft["id"] == inc["_inc_key"], "inner")
-    return (
-        joined.withColumn(
-            "callsign",
-            # last truthy include.callsign overrides (task.ts:227-229);
-            # _inc_callsign is NULL when no include had a truthy callsign
-            F.coalesce(F.col("_inc_callsign"), F.col("callsign")),
-        )
-        .withColumn(
-            "metadata",
-            F.col("metadata").withField(
-                "group", F.coalesce(F.col("_inc_group"), F.col("metadata.group"))
-            ),
-        )
-        .drop("_inc_key", "_inc_callsign", "_inc_group")
+    enrich = _enrichment()
+    return aircraft.join(_includes_side(includes), "id").select(
+        *[enrich.get(c, c) for c in aircraft.columns], POSITION
     )
 
 

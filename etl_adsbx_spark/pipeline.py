@@ -5,25 +5,61 @@ re-expressed as one declarative plan.
       → row transform (one `select`, codegen'd)    R5-R20
       → last-write-wins dedup per id               R21
       → includes broadcast join + enrichment       R22-R24
-      → first-wins output dedup                    R25/R26
+      → FeatureCollection position per id          R25/R26
       → Feature nesting / FeatureCollection sink   R20/R28
 
-Catalyst fuses R5-R20 into a single narrow stage; the only shuffles are
-the two keyed dedups (hash agg, map-side partial); the includes join is a
-broadcast (zero shuffle). At 100 TB this plan holds: dedup keys (aircraft
-ids) are high-cardinality/low-skew, and the dimension side is O(10²) rows.
+Catalyst fuses R5-R20 into a single narrow stage; the only shuffle is the
+last-wins keyed dedup (hash agg, map-side partial); the includes join is
+a broadcast of a local relation built once per includes DataFrame. There
+is no output dedup: last-wins leaves one row per id and the includes side
+is unique per key, so the reference's first-wins Set guard
+(task.ts:235-238, 244-247) never drops a row. What the guard fixes is the
+output order, which ``control`` emits as the ``POSITION`` column and the
+sinks order by.
+
+At 100 TB this plan holds: dedup keys (aircraft ids) are
+high-cardinality/low-skew, and the dimension side is O(10²) rows.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions import scalar as S
-from .operators.dedup import first_wins, last_wins
+from .operators.dedup import last_wins
 from .operators.joins import includes_join
+from .schemas import POSITION
+
+
+@functools.lru_cache(maxsize=32)
+def _transform_columns(input_cols: tuple[str, ...], hostile_enabled: bool) -> tuple[Column, ...]:
+    """The Columns ``transform`` selects, except the `time`/`start`
+    stamps, followed by its row filter. Each ``F.*`` call is a round trip
+    to the JVM, so a tick pays for them once per input schema."""
+    raw_id = S.coalesce_falsy_str("r", "flight")                 # R5 (task.ts:139)
+    metadata = F.struct(
+        *[
+            # group default 'UNKNOWN' comes from the schema default (task.ts:70)
+            F.coalesce(F.col(c), F.lit("UNKNOWN")).alias(c) if c == "group" else F.col(c)
+            for c in input_cols if c != "_idx"
+        ]
+    )
+    return (
+        F.col("_idx"),
+        S.normalize_key(raw_id).alias("id"),                     # R7 (task.ts:142)
+        S.cot_type(hostile_enabled=hostile_enabled).alias("cot_type"),  # R10-R13
+        S.callsign_col().alias("callsign"),                      # R14 (task.ts:192)
+        S.speed_ms().alias("speed"),                             # R16 (task.ts:195)
+        S.course_deg().alias("course"),                          # R17 (task.ts:196)
+        metadata.alias("metadata"),                              # R18 (task.ts:197)
+        S.remarks_col().alias("remarks"),                        # R19 (task.ts:198-205)
+        S.point_coordinates().alias("coordinates"),              # R8/R9 (task.ts:143-146)
+        F.col("id").isNotNull() & (F.length("id") > 0),          # R6 (task.ts:140,148)
+    )
 
 
 def transform(aircraft: DataFrame, batch_time: dt.datetime | None = None,
@@ -32,35 +68,12 @@ def transform(aircraft: DataFrame, batch_time: dt.datetime | None = None,
 
     ``batch_time`` pins the wall-clock `time`/`start` stamps
     (task.ts:193-194) for reproducible tests; None → current_timestamp()
-    (production semantics).
+    (production semantics), fixed when each query runs.
     """
     ts = F.lit(batch_time).cast("timestamp") if batch_time else F.current_timestamp()
-    raw_id = S.coalesce_falsy_str("r", "flight")                 # R5 (task.ts:139)
-    input_cols = [c for c in aircraft.columns if c != "_idx"]
-    metadata = F.struct(
-        *[
-            # group default 'UNKNOWN' comes from the schema default (task.ts:70)
-            F.coalesce(F.col(c), F.lit("UNKNOWN")).alias(c) if c == "group" else F.col(c)
-            for c in input_cols
-        ]
-    )
-    return (
-        aircraft.withColumn("id", S.normalize_key(raw_id))       # R7 (task.ts:142)
-        .filter(F.col("id").isNotNull() & (F.length("id") > 0))  # R6 (task.ts:140,148)
-        .select(
-            "_idx",
-            "id",
-            S.cot_type(hostile_enabled=hostile_enabled).alias("cot_type"),  # R10-R13
-            S.callsign_col().alias("callsign"),                  # R14 (task.ts:192)
-            ts.alias("time"),                                    # R15 (task.ts:193)
-            ts.alias("start"),                                   # R15 (task.ts:194)
-            S.speed_ms().alias("speed"),                         # R16 (task.ts:195)
-            S.course_deg().alias("course"),                      # R17 (task.ts:196)
-            metadata.alias("metadata"),                          # R18 (task.ts:197)
-            S.remarks_col().alias("remarks"),                    # R19 (task.ts:198-205)
-            S.point_coordinates().alias("coordinates"),          # R8/R9 (task.ts:143-146)
-        )
-    )
+    *cols, keep = _transform_columns(tuple(aircraft.columns), hostile_enabled)
+    # R15 (task.ts:193-194)
+    return aircraft.select(*cols, ts.alias("time"), ts.alias("start")).filter(keep)
 
 
 def control(
@@ -70,28 +83,25 @@ def control(
     hostile_enabled: bool = False,
     batch_time: dt.datetime | None = None,
 ) -> DataFrame:
-    """Full per-batch pipeline → flat feature rows (nest via
-    ``to_features``). Mirrors control() (task.ts:115-258)."""
+    """Full per-batch pipeline → flat feature rows with their
+    FeatureCollection ``POSITION`` (nest via ``to_features``). Mirrors
+    control() (task.ts:115-258)."""
     feats = transform(aircraft, batch_time, hostile_enabled)
-    # R21: Map-upsert — last row per id in ingestion order wins (task.ts:136)
-    deduped = last_wins(feats, "id", "_idx")
     if includes is not None and filtering:
-        joined = includes_join(deduped, includes)
-        # R25: first-wins by id in *includes-list* order (quirk #5). The
-        # pre-aggregated includes side makes the join unique per id already;
-        # first_wins is kept as the explicit Set-guard operator
-        # (task.ts:235-238) and is a no-op hash-agg here.
-        return first_wins(joined, "id", "_inc_idx").drop("_inc_idx")
+        # R21: Map-upsert — last row per id in ingestion order wins
+        # (task.ts:136); R22-R25: the position is the first matching
+        # include's (quirk #5), which the join emits
+        return includes_join(last_wins(feats, "id", "_idx"), includes)
     # ADSBX_INCLUDES_FILTERING=false branch (task.ts:241-249): the includes
     # list is NOT consulted at all — every deduped feature passes through
-    # unenriched; the Set guard is a no-op because Map keys are unique.
-    return deduped
+    # unenriched, in Map insertion order: at its id's first row, with its
+    # last row's content
+    return last_wins(feats, "id", "_idx", first_as=POSITION)
 
 
-def to_features(flat: DataFrame) -> DataFrame:
-    """Nest flat feature columns into the GeoJSON Feature shape
-    (task.ts:187-211, FEATURE_SCHEMA)."""
-    return flat.select(
+@functools.cache
+def _feature_columns() -> tuple[Column, ...]:
+    return (
         F.col("id"),
         F.lit("Feature").alias("type"),
         F.struct(
@@ -108,3 +118,10 @@ def to_features(flat: DataFrame) -> DataFrame:
             F.lit("Point").alias("type"), F.col("coordinates").alias("coordinates")
         ).alias("geometry"),
     )
+
+
+def to_features(flat: DataFrame) -> DataFrame:
+    """Nest flat feature columns into the GeoJSON Feature shape
+    (task.ts:187-211, FEATURE_SCHEMA), carrying ``POSITION`` along for
+    the sinks."""
+    return flat.select(*_feature_columns(), POSITION)

@@ -15,6 +15,7 @@ execute anything extra.
 
 from __future__ import annotations
 
+import logging
 from collections import deque
 from collections.abc import Callable
 from typing import Any
@@ -33,6 +34,9 @@ _hook: Callable[[str, str, Any], None] | None = None
 #: 1024 covers any release interval the bench uses; an id that falls off
 #: the end is simply left to the ContextCleaner, the pre-r11 behavior).
 _live_pins: deque[int] = deque(maxlen=1024)
+
+_log = logging.getLogger(__name__)
+_unpersist_failure_logged = False
 
 
 def set_step_plan_hook(
@@ -109,6 +113,7 @@ def release_pins() -> int:
     re-measures sees them gone). No RDD reference is ever held on the
     Python side, so pins in sessions that never call this stay eligible
     for normal ContextCleaner cleanup."""
+    global _unpersist_failure_logged
     n = 0
     if not _live_pins:
         return 0
@@ -125,7 +130,10 @@ def release_pins() -> int:
             jsc.unpersistRDD(rdd_id, True)
             n += 1
         except Exception:  # noqa: BLE001 — already cleaned / gone
-            pass
+            if not _unpersist_failure_logged:
+                _unpersist_failure_logged = True
+                _log.warning("unpersistRDD(%d) failed; later failures are not logged",
+                             rdd_id, exc_info=True)
     return n
 
 

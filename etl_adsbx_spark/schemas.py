@@ -119,6 +119,12 @@ FEATURE_SCHEMA = StructType(
     ]
 )
 
+#: Position of a flat feature row in the tick's FeatureCollection (R25,
+#: quirk #5): ``pipeline.control`` emits it, ``pipeline.to_features``
+#: carries it, and the sinks order by it without ever emitting or
+#: persisting it. It is not part of FEATURE_SCHEMA.
+POSITION = "_pos"
+
 # --- Driver test tables (TESTDATA.md) ---
 DRIVER_TABLES = (
     "region",

@@ -5,9 +5,19 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .schemas import POSITION
+
+
+def _feature_collection(features: DataFrame) -> tuple[str, int]:
+    body = F.to_json(F.struct(*[c for c in features.columns if c != POSITION]))
+    rows = sorted(features.select(POSITION, body).collect(), key=itemgetter(0))
+    doc = '{"type":"FeatureCollection","features":[' + ",".join(r[1] for r in rows) + "]}"
+    return doc, len(rows)
 
 
 def feature_collection_json(features: DataFrame) -> str:
@@ -17,19 +27,23 @@ def feature_collection_json(features: DataFrame) -> str:
     driver-side collect of the (already deduped, O(10³-10⁴) row) feature set
     is the correct shape — this is the one place `collect()` is legitimate.
     For unbounded outputs use ``write_json`` instead.
+
+    One Spark action: the features' ``to_json`` strings are collected,
+    ordered by ``POSITION`` on the driver (a global ``orderBy`` would add
+    a range-partition sampling job) and joined as they are. The document
+    therefore carries Spark's JSON text: raw UTF-8 rather than ``\\uXXXX``
+    escapes, and Java's double formatting (``1.0E-5``).
     """
-    docs = features.select(F.to_json(F.struct(*features.columns)).alias("j")).collect()
-    return json.dumps(
-        {"type": "FeatureCollection", "features": [json.loads(r.j) for r in docs]},
-        separators=(",", ":"),
-    )
+    return _feature_collection(features)[0]
 
 
 def submit(features: DataFrame, post_fn: Callable[[str], None]) -> int:
     """`submit()` equivalent (task.ts:257): POST the FeatureCollection.
-    Returns the feature count (the reference logs ids.size, task.ts:251)."""
-    n = features.count()
-    post_fn(feature_collection_json(features))
+    Returns the feature count (the reference logs ids.size, task.ts:251),
+    counted from the rows of the document's one collect — no second
+    action."""
+    doc, n = _feature_collection(features)
+    post_fn(doc)
     return n
 
 
@@ -364,7 +378,7 @@ def exactly_once_batch_sink(
     Returns the (df, batch_id) callable for
     ``writeStream.foreachBatch(...)``. ``partition_by`` routes through
     the small-file-safe ``write_corpus``; without it the batch is a
-    plain parquet write."""
+    plain parquet write. A ``POSITION`` column is never written."""
     import os
     import shutil
 
@@ -372,6 +386,7 @@ def exactly_once_batch_sink(
         raise ValueError(f"unknown commit protocol: {commit!r}")
 
     def write_batch(df: DataFrame, target: str) -> None:
+        df = df.drop(POSITION)  # a feature's tick position is not data
         if partition_by:
             write_corpus(df, target, partition_by, **write_kwargs)
         else:

@@ -22,6 +22,7 @@ import json
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .files import parse_envelope
@@ -90,5 +91,7 @@ def fetch_batch(
     payload = fetch(url, token)
     # sanity: payload must be a JSON object (cheap driver-side pre-check)
     json.loads(payload)
-    raw = spark.createDataFrame([(payload,)], "value string")
+    # from Arrow, createDataFrame builds a local relation: scanning it
+    # runs no Python worker, unlike a list of rows
+    raw = spark.createDataFrame(pa.table({"value": [payload]}))
     return parse_envelope(raw, strict=True)

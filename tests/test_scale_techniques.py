@@ -208,11 +208,11 @@ def test_global_running_sum_matches_naive(spark, num_parts):
 def test_flagship_pipeline_plan_shape(spark):
     """Pin the flagship pipeline's physical plan (SURVEY §3.4 lifecycle
     claim): the includes dimension joins as exactly ONE BroadcastHashJoin,
-    and the whole pipeline runs on TWO hash-partition shuffles — one
-    id-keyed exchange SHARED by both keyed dedups (the broadcast join
-    preserves the left partitioning, so first-wins reuses last-wins'
-    shuffle) plus the broadcast-side tiny includes pre-aggregate. No
-    sort-merge join, no cartesian/nested-loop anywhere. A regression that
+    and the whole pipeline runs on ONE hash-partition shuffle — the
+    id-keyed last-wins dedup. The includes pre-aggregate is built once,
+    before the plan, as a local relation, so the broadcast side has no
+    shuffle, and there is no output dedup (pipeline.py). No sort-merge
+    join, no cartesian/nested-loop anywhere. A regression that
     adds a shuffle or demotes the broadcast at 100 TB would 10× the
     pipeline cost; this test catches it at sf0.001."""
     import re
@@ -227,7 +227,7 @@ def test_flagship_pipeline_plan_shape(spark):
     assert "SortMergeJoin" not in final, final
     assert "CartesianProduct" not in final, final
     assert "BroadcastNestedLoopJoin" not in final, final
-    assert len(re.findall(r"Exchange hashpartitioning", final)) == 2, final
+    assert len(re.findall(r"Exchange hashpartitioning", final)) == 1, final
     assert len(re.findall(r"BroadcastExchange", final)) == 1, final
 
 
@@ -654,6 +654,36 @@ def test_release_pins_frees_blocks_and_recompute_matches(spark):
     ).collect()[0][0]
     assert total2 == total1
     planprobe.release_pins()
+
+
+def test_release_pins_logs_a_failed_unpersist_once(monkeypatch, caplog):
+    """A pin whose unpersist raises is skipped, and the first such failure
+    is logged — once, however many follow."""
+    import logging
+
+    from pyspark import SparkContext
+
+    from etl_adsbx_spark import planprobe
+
+    class FailingContext:
+        class _jsc:
+            @staticmethod
+            def sc():
+                return FailingContext
+
+        @staticmethod
+        def unpersistRDD(rdd_id, blocking):
+            raise RuntimeError(f"no RDD {rdd_id}")
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", FailingContext)
+    monkeypatch.setattr(planprobe, "_unpersist_failure_logged", False)
+    monkeypatch.setattr(planprobe, "_live_pins", type(planprobe._live_pins)([7, 8, 9]))
+    with caplog.at_level(logging.WARNING, logger=planprobe.__name__):
+        assert planprobe.release_pins() == 0
+        planprobe._live_pins.append(10)
+        assert planprobe.release_pins() == 0
+    assert len(caplog.records) == 1 and "unpersistRDD" in caplog.records[0].getMessage()
+    assert not planprobe._live_pins
 
 
 def test_iterative_step_plan_lint(spark):

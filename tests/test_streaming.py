@@ -117,7 +117,7 @@ def test_stateful_last_position(spark):
     deadline = _time.time() + 120
     while _time.time() < deadline:
         a, b = results.get("a"), results.get("b")
-        if a is not None and a["n_seen"] == 2 and b is not None:
+        if a is not None and a["n_seen"] == 2 and b is not None and b["n_seen"] == 1:
             break
         _time.sleep(0.25)
     q.stop()
