@@ -15,21 +15,49 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
-def _host_memory_gb() -> int:
+def _cgroup_limit_files(proc_cgroup: str, root: str) -> list[str]:
+    """The memory-limit files that can bound this process: those of its
+    own cgroup and every ancestor, most specific first (a process in a
+    nested cgroup — a systemd slice, a k8s pod without a cgroup
+    namespace — has no limit file at the mount root), then the two
+    root-namespace files. Covers cgroup v2 (``0::<path>``) and the v1
+    memory controller."""
+    try:
+        with open(proc_cgroup) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        lines = []
+    files = []
+    for line in lines:
+        hier, controllers, path = line.split(":", 2)
+        if hier == "0":
+            base, name = root, "memory.max"
+        elif "memory" in controllers.split(","):
+            base, name = os.path.join(root, "memory"), "memory.limit_in_bytes"
+        else:
+            continue
+        parts = [p for p in path.split("/") if p]
+        files += [os.path.join(base, *parts[:i], name) for i in range(len(parts), 0, -1)]
+    return files + [os.path.join(root, "memory.max"),
+                    os.path.join(root, "memory", "memory.limit_in_bytes")]
+
+
+def _host_memory_gb(proc_cgroup: str = "/proc/self/cgroup",
+                    cgroup_root: str = "/sys/fs/cgroup") -> int:
     """Usable physical memory in GB: the sysconf total clamped by the
-    cgroup memory limit when one applies (r11 ADVICE, low: a
-    memory-limited container on a large host would otherwise derive — and
-    with AlwaysPreTouch eagerly commit — a heap sized to the HOST's RAM
-    and get OOM-killed at startup). Reads cgroup v2 then v1; a missing or
-    unlimited ("max" / huge sentinel) limit falls through to sysconf."""
+    tightest cgroup memory limit that applies (a memory-limited container
+    on a large host would otherwise derive — and with AlwaysPreTouch
+    eagerly commit — a heap sized to the HOST's RAM and get OOM-killed at
+    startup). A missing or unlimited ("max" / huge sentinel) limit leaves
+    the sysconf total."""
     try:
         total = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
     except (ValueError, OSError, AttributeError):  # pragma: no cover
         total = 16
-    for path in ("/sys/fs/cgroup/memory.max",
-                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+    for path in _cgroup_limit_files(proc_cgroup, cgroup_root):
         try:
-            raw = open(path).read().strip()
+            with open(path) as f:
+                raw = f.read().strip()
         except OSError:
             continue
         if raw.isdigit():
@@ -38,7 +66,6 @@ def _host_memory_gb() -> int:
             # limit BELOW the physical total is a real container bound
             if 0 < limit_gb < total:
                 total = limit_gb
-        break
     return total
 
 
@@ -73,22 +100,20 @@ def default_driver_xms() -> str:
 
     - lazy heap EXPANSION lands tens of GB of page faults inside whichever
       queries happen to trigger it — measured 3-10× intermittent stalls on
-      individual bench runs (a 5 s query taking 28-70 s) with GC time and
-      calibration rows healthy;
+      individual benchmarked queries (a 5 s query taking 28-70 s) with GC
+      time healthy;
     - G1 UNCOMMITS regions after cleanup pauses, so the next heavy query
       re-pays faults for pages the JVM already owned. Xms is the floor G1
       never shrinks below, which ends the fault-refault churn.
 
-    16 GB covers the bench working set with margin (the heaviest query
-    family holds ~8 GB committed once pinned blocks are released between
-    runs); ``-Xmx`` stays at :func:`default_driver_memory` so decade
-    probes keep their headroom, paying lazy faults only above the floor.
-    Clamped to the Xmx so small hosts never request Xms > Xmx.
-    ``SPARK_GRAFT_DRIVER_XMS`` overrides (e.g. a probe that wants the
-    whole heap pre-touched, or CI that wants a fast cold start)."""
-    env = os.environ.get("SPARK_GRAFT_DRIVER_XMS")
-    if env:
-        return env
+    16 GB covers the sf0.1 registry working set with margin (the heaviest
+    query family holds ~8 GB committed once pinned blocks are released
+    between runs); ``-Xmx`` stays at :func:`default_driver_memory` so
+    decade probes keep their headroom, paying lazy faults only above the
+    floor. Clamped to the Xmx so small hosts never request Xms > Xmx. An
+    ``-Xms`` in ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` overrides it (get_spark
+    appends those options after this one, and the JVM applies the last
+    flag given)."""
     xmx = default_driver_memory()
     try:
         xmx_gb = int(xmx.rstrip("gG"))
@@ -131,7 +156,7 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         # count: hypothesis property suites run hundreds of FEW-ROW Spark
         # jobs where the fine-grained start is pure per-job overhead —
         # measured ~3-4× suite slowdown; the data-sized runs that need the
-        # fan-out — bench, decade probes — keep the 256 default).
+        # fan-out — perfbench, decade probes — keep the 256 default).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             os.environ.get(
@@ -149,24 +174,20 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         # mid-query (the r11 stall pathology; measured r12: late-suite
         # tests ran up to ~10× their isolated time). 5 min keeps the
         # backlog bounded at the cost of one cheap driver full-GC per
-        # interval; explicit frees (bench release_pins, operators'
-        # unpersist discipline) remain the first line.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "5min"),
-        )
+        # interval; explicit frees (planprobe.release_pins between
+        # perfbench ops, operators' unpersist discipline) remain the first
+        # line.
+        .config("spark.cleaner.periodicGC.interval", "5min")
         # Spark 4.1's ChecksumCheckpointFileManager leaks its I/O thread
         # pools PER STREAMING QUERY — measured r12: 128 threads per
         # stateful query, surviving q.stop() (a zombie or long test
         # session accumulates 1000+ JVM threads and every later job slows
         # ~10×). Checkpoint-file checksums protect against object-store
         # corruption; local-disk checkpoints (tests, single-box runs)
-        # get no benefit, so default OFF here and let a cluster deploy
-        # re-enable via env once the upstream leak is fixed.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM", "false"),
-        )
+        # get no benefit, so default OFF here; it is a SQL conf, so a
+        # cluster deploy re-enables it with spark.conf.set once the
+        # upstream leak is fixed.
+        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -177,12 +198,12 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         # default_driver_xms for the measured stall pathology. Applied at
         # JVM launch; a no-op when an existing session is reused.
         # User-supplied options (SPARK_GRAFT_DRIVER_JAVA_OPTS — e.g. GC
-        # logging flags) are merged in, not clobbered (r11 ADVICE, low);
-        # the heap floor itself is overridden via SPARK_GRAFT_DRIVER_XMS.
+        # logging flags) come AFTER the built-in ones: the JVM applies the
+        # last flag given, so a user -Xms or -XX:-AlwaysPreTouch wins.
         .config(
             "spark.driver.extraJavaOptions",
-            (os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "") + " "
-             + f"-Xms{default_driver_xms()} -XX:+AlwaysPreTouch").strip(),
+            (f"-Xms{default_driver_xms()} -XX:+AlwaysPreTouch "
+             + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")).strip(),
         )
         .config("spark.ui.enabled", "false")
     )

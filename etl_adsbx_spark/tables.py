@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 
 from .schemas import DRIVER_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a driver table.

@@ -1,7 +1,7 @@
 """Generic registry scale probe: time any registered queries across any
 list of SF dirs and print one JSON line with per-op medians plus the
 ratio between consecutive dirs — the shared harness behind BASELINE.md's
-scaling tables (probe_cont2.py is the fixed round-5 instance of this).
+scaling tables.
 
 Usage:
     python scripts/probe_registry.py <op1,op2,...> <dir1> <dir2> [dir3 ...]

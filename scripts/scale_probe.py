@@ -44,8 +44,8 @@ PROBE = [
     "window_running",
     "q5_regional_revenue",
     "q18_large_orders",
-    # the rest of bench.py's headline set + the flagship pipeline, so the
-    # scaling table covers every benchmarked query, not just the heavies
+    # the flagship pipeline and the lighter TPC-H/event keys, so the
+    # scaling table covers more than the heavies
     "cot_pipeline",
     "q1_pricing_summary",
     "q3_shipping_priority",

@@ -7,7 +7,7 @@ the all-keys pass (the sf0.1 sweep discipline, SURVEY §5).
 
 One timed run per (query, SF) after a shared sf0.001 warm-up pass — this
 is an OUTLIER SCREEN (>3× flags), not an anchor table; the 3-run-median
-protocol stays with bench.py / the probe scripts.
+protocol stays with scripts/probe_registry.py.
 
 Usage: python scripts/sweep_sf1.py [out_json]
 """
@@ -30,7 +30,7 @@ BASE = "/root/testdata/sf0.1"
 TARGET = "testdata_sf1"
 WARM = "/root/testdata/sf0.001"
 
-# Projection-only queries (bench.FORCE_COL): count() lets Catalyst prune
+# Projection-only queries: count() lets Catalyst prune
 # the measured expression — force through a 1-row sum instead.
 FORCE_COL = {"ewma_smooth": "ewma", "readability_scores": "flesch_ease"}
 

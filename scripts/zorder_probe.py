@@ -10,6 +10,7 @@ open, and time the filtered scan on each layout. Usage:
 from __future__ import annotations
 
 import glob
+import os
 import statistics
 import sys
 import tempfile
@@ -17,7 +18,7 @@ import time
 
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -30,12 +30,14 @@ def spark():
     # fine-grained AQE start (initialPartitionNum=256, session.py) is
     # pure per-job overhead at that shape — pin tests to the shuffle
     # count; results are partitioning-invariant by the exactness
-    # contracts (and the decade probes/bench exercise the 256 default)
+    # contracts (and the decade probes/perfbench exercise the 256 default)
     os.environ.setdefault("SPARK_GRAFT_INIT_PARTS", "32")
     # the pre-touched heap floor (session.default_driver_xms) sizes for
-    # the sf0.1 bench working set; at sf0.001 the suite never needs it —
-    # keep the test JVM's cold start fast (same rationale as INIT_PARTS)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_XMS", "2g")
+    # the sf0.1 registry working set; at sf0.001 the suite never needs it —
+    # keep the test JVM's cold start fast (same rationale as INIT_PARTS).
+    # User options follow the built-in ones, so this -Xms is the one the
+    # JVM applies.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-Xms2g")
     s = get_spark("etl-adsbx-spark-tests")
     yield s
 
@@ -45,13 +47,13 @@ def _release_pins_between_tests():
     """Drop each test's dead checkpoint blocks as soon as it finishes.
 
     Operators pin shared subtrees with lazy ``localCheckpoint`` via
-    ``planprobe.pin``; in the bench those blocks are freed between timed
-    samples, but a pytest session never released them — over ~600 tests
+    ``planprobe.pin``; perfbench frees those blocks between ops, but a
+    pytest session never released them — over ~600 tests
     the dead blocks pile up in the BlockManager, the driver heap grows
     past the 2g test floor, and on this memory-bandwidth-starved host
     the page-fault churn slows LATER tests by up to ~10×
     (test_cc_incremental_matches_full_recompute: 610 s at suite position
-    ~540 vs 66 s in isolation, measured r12 — the r11 bench-stall
+    ~540 vs 66 s in isolation, measured r12 — the r11 query-stall
     pathology inside pytest). Releasing after EACH test is safe: no
     fixture carries a pinned DataFrame across tests (module-scoped
     fixtures hold raw createDataFrame frames or already-collected rows),

@@ -92,8 +92,8 @@ def test_sweep_artifact_covers_full_registry():
     """The committed sf1 sweep JSON must hold a row for EVERY registry
     key (r9 verdict: SWEEP_SF1_r9.json stopped at 115 of 117, so a tool
     diffing sweeps saw keys vanish). Pin the newest committed sweep to
-    the registry the same way the bench stdout line is pinned — if a key
-    is added without re-sweeping, this fails loudly."""
+    the registry — if a key is added without re-sweeping, this fails
+    loudly."""
     import glob
     import json
     import os

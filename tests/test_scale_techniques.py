@@ -620,8 +620,8 @@ def test_triangle_plan_has_no_broadcast_nested_loop(spark):
 
 def test_release_pins_frees_blocks_and_recompute_matches(spark):
     """planprobe.release_pins drops the storage blocks of every pin
-    created since the last release (the bench calls it between timed
-    samples — left to the ContextCleaner, dead checkpoint blocks
+    created since the last release (perfbench calls it between ops —
+    left to the ContextCleaner, dead checkpoint blocks
     accumulate for the whole run and the heap growth page-faults fresh
     OS pages mid-query: the r11 intermittent-stall fix). A released pin
     must (a) actually disappear from BlockManager storage and (b) leave a
