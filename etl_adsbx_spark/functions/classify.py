@@ -18,10 +18,9 @@ Scale shape:
   the ``d`` gradient sums + log-loss with map-side partials; the weight
   vector (a handful of doubles) updates driver-side. For SAMPLED fit
   frames (the production shape: ``operators/sampling.hash_sample`` then
-  fit, statistically standard for a d≈10 model) ``fit_logreg_local`` /
-  ``mode="local"`` removes the per-step job barrier entirely — one
-  Arrow task runs the whole loop (sf10: 5.4s), deterministic via
-  in-kernel sorting, float-tolerance vs the decimal path.
+  fit, statistically standard for a d≈10 model) the per-step jobs
+  shrink with the frame. ``reference_fit_logreg`` is the pure-Python
+  oracle the tests compare this fit against.
 - **fit is bit-deterministic.** Each row's gradient contribution is
   rounded to ``decimal(38,18)`` before summing; decimal addition is
   exact and order-independent, so the fitted weights are identical
@@ -156,74 +155,6 @@ def fit_logreg(
     return w, losses
 
 
-def fit_logreg_local(
-    df: DataFrame,
-    features_col: str,
-    label_col: str,
-    dim: int,
-    steps: int = 60,
-    lr: float = 1.0,
-    l2: float = 0.0,
-) -> tuple[list[float], list[float]]:
-    """ONE-JOB twin of ``fit_logreg`` for broadcast-size fit frames: the
-    features materialize distributed (one pass over the docs), collapse to
-    a single partition, and the whole gradient loop runs inside one Arrow
-    ``mapInPandas`` task — no per-step job barrier, which is the right
-    cluster shape when the SAMPLE is small even though the corpus is not
-    (a d≈6 model saturates on ~10^4 rows; 30 sequential barriers to fit
-    it is latency, not work).
-
-    Deterministic under any partitioning: the kernel sorts rows by
-    (features, label) before the numpy loop, so the float accumulation
-    order is a pure function of the data. Sequential IEEE adds, not the
-    distributed path's exact decimals — fits agree to float-accumulation
-    tolerance (differential-tested), bitwise across reruns/partitionings
-    of the same data. Raises on an empty frame, like ``fit_logreg``."""
-    import numpy as np
-
-    out_schema = "w array<double>, losses array<double>"
-
-    def kernel(batches):
-        xs, ys = [], []
-        for pdf in batches:
-            for x, y in zip(pdf[features_col], pdf[label_col]):
-                xs.append(list(x))
-                ys.append(float(y))
-        if not xs:
-            return
-        order = sorted(range(len(xs)), key=lambda i: (xs[i], ys[i]))
-        X = np.array([xs[i] for i in order], dtype=np.float64)
-        Y = np.array([ys[i] for i in order], dtype=np.float64)
-        n = len(Y)
-        w = np.zeros(dim)
-        losses = []
-        for _ in range(steps):
-            z = np.clip(X @ w, -30.0, 30.0)
-            p = 1.0 / (1.0 + np.exp(-z))
-            losses.append(
-                float(-np.sum(Y * np.log(p + 1e-12) + (1 - Y) * np.log(1 - p + 1e-12)))
-                / n
-            )
-            g = X.T @ (p - Y) / n
-            w = w - lr * (g + l2 * w)
-        import pandas as pd
-
-        yield pd.DataFrame({"w": [list(w)], "losses": [losses]})
-
-    rows = (
-        # repartition, not coalesce: coalesce(1) would collapse the
-        # feature-extraction pass itself into one task; the round-trip
-        # shuffle keeps extraction parallel and only the fit single-task
-        df.select(features_col, label_col)
-        .repartition(1)
-        .mapInPandas(kernel, out_schema)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("fit_logreg_local: empty fit frame")
-    return list(rows[0]["w"]), list(rows[0]["losses"])
-
-
 def logreg_score(features: Column, weights: list[float]) -> Column:
     """sigmoid(w·x) with the fitted weights embedded as literals — the
     map-side scoring expression (no shuffle, no broadcast, no Python)."""
@@ -237,23 +168,13 @@ def fit_quality_classifier(
     steps: int = 60,
     lr: float = 1.0,
     l2: float = 1e-4,
-    mode: str = "distributed",
 ) -> tuple[list[float], list[float]]:
     """Fit the quality classifier on labeled documents using the frozen
-    ``doc_features`` map. Returns (weights, loss curve).
-
-    ``mode="distributed"`` (default): exact-decimal per-step agg jobs —
-    bit-deterministic under any partitioning, corpus-size fit frames OK.
-    ``mode="local"``: one-job ``fit_logreg_local`` — the low-latency
-    shape for sampled (broadcast-size) fit frames; deterministic via
-    in-kernel sorting, float-tolerance vs the distributed fit."""
+    ``doc_features`` map with the exact-decimal ``fit_logreg``. Returns
+    (weights, loss curve)."""
     feats = docs.select(
         doc_features(text_col).alias("_x"), F.col(label_col).alias("_y")
     )
-    if mode == "local":
-        return fit_logreg_local(feats, "_x", "_y", dim=6, steps=steps, lr=lr, l2=l2)
-    if mode != "distributed":
-        raise ValueError("mode must be 'distributed' or 'local'")
     return fit_logreg(feats, "_x", "_y", dim=6, steps=steps, lr=lr, l2=l2)
 
 

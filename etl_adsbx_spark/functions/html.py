@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -107,26 +106,3 @@ def extract_html_text(
 
     out = df.withColumn(out_col, _extract(F.col(html_col)))
     return out.drop(html_col) if drop_html else out
-
-
-def extract_html_text_mapin(
-    df: DataFrame, html_col: str = "html", out_col: str = "text"
-) -> DataFrame:
-    """``mapInPandas`` twin of ``extract_html_text`` — same kernel, full
-    control of the output schema (drops the markup column INSIDE the
-    batch, so wide HTML never round-trips through Arrow twice). Use when
-    the markup column is large relative to the rest of the row."""
-    keep = [f for f in df.schema.fields if f.name != html_col]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in keep]
-        + [f"{out_col} string"]
-    )
-    names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[names].copy()
-            out[out_col] = pdf[html_col].map(html_to_text_py)
-            yield out
-
-    return df.mapInPandas(fn, schema)

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -99,25 +98,3 @@ def extract_and_normalize(
 
     out = df.withColumn(out_col, _fused(F.col(html_col)))
     return out.drop(html_col) if drop_html else out
-
-
-def normalize_text_mapin(
-    df: DataFrame, text_col: str = "text", out_col: str = "text_norm"
-) -> DataFrame:
-    """``mapInPandas`` twin — drops the raw column INSIDE the batch so
-    un-normalized text never crosses Arrow twice (the
-    ``extract_html_text_mapin`` shape)."""
-    keep = [f for f in df.schema.fields if f.name != text_col]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in keep]
-        + [f"{out_col} string"]
-    )
-    names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[names].copy()
-            out[out_col] = pdf[text_col].map(normalize_text_py)
-            yield out
-
-    return df.mapInPandas(fn, schema)

@@ -32,15 +32,6 @@ def coalesce_falsy_str(*cols: Column | str) -> Column:
     return parts[0] if len(parts) == 1 else F.coalesce(*parts)
 
 
-def coalesce_falsy_num(*cols: Column | str) -> Column:
-    """JS `||` chain over *numeric* operands: first value that is neither
-    NULL nor 0 (task.ts:196 `track || 9999999.0` — SURVEY.md quirk #2)."""
-    parts = [
-        F.nullif(F.col(c) if isinstance(c, str) else c, F.lit(0)) for c in cols
-    ]
-    return parts[0] if len(parts) == 1 else F.coalesce(*parts)
-
-
 def normalize_key(col: Column | str) -> Column:
     """Canonical aircraft id: lower(trim(x)) (task.ts:142, R7)."""
     col = F.col(col) if isinstance(col, str) else col

@@ -1,5 +1,5 @@
 """[EXT] Vector column expressions over ``embeddings.embedding``
-(array<float>): dot product, norms, cosine — higher-order built-ins
+(array<float>): dot product and norms — higher-order built-ins
 (`zip_with`/`aggregate`), JVM-side, no Python in the hot path.
 
 Floats are cast to double *before* any arithmetic so Spark and the DuckDB
@@ -27,7 +27,3 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

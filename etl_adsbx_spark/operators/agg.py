@@ -27,12 +27,6 @@ def topk_per_group(
     )
 
 
-def count_per_batch(df: DataFrame) -> int:
-    """Observability count per batch — reference `ids.size` log
-    (task.ts:251, R27)."""
-    return df.count()
-
-
 def observed_count(df: DataFrame):
     """R27 in its zero-cost form: attach an ``observe`` metric instead of
     running a separate count job. The count accumulates on the rows the

@@ -279,43 +279,6 @@ def range_pair_counts(
     )
 
 
-def bucketed_range_join_ns(
-    left: DataFrame,
-    right: DataFrame,
-    left_ns: str,
-    right_ns: str,
-    lower_ns: int,
-    upper_ns: int,
-    bucket_ns: int = 3_600_000_000_000,
-) -> DataFrame:
-    """Integer-domain variant of ``bucketed_range_join`` for exact
-    nanosecond timestamps (events.ts is TIMESTAMP(NANOS) — see tables.py):
-    right_ns ∈ [left_ns - lower_ns, left_ns + upper_ns]. Same plan shape:
-    explode left into covering buckets, equi-join, refine."""
-    # integer DIV, not `/`: epoch-nanos (~1.8e18) exceed double's 2^53 exact range.
-    # DIV truncates toward zero (floor only for non-negatives), which is still
-    # correct for pre-1970 negative nanos: coverage needs only MONOTONICITY —
-    # l-lo <= r <= l+hi implies trunc-bucket(l-lo) <= trunc-bucket(r) <=
-    # trunc-bucket(l+hi), and the sequence covers every bucket in between
-    # (buckets near zero are merely 2x-wide, costing a few extra candidates
-    # that the exact refine filter below removes).
-    lbuck = left.withColumn(
-        "_bucket",
-        F.explode(
-            F.expr(
-                f"sequence(({left_ns} - {lower_ns}L) DIV {bucket_ns}L,"
-                f" ({left_ns} + {upper_ns}L) DIV {bucket_ns}L)"
-            )
-        ),
-    )
-    rbuck = right.withColumn("_bucket", F.expr(f"{right_ns} DIV {bucket_ns}"))
-    joined = lbuck.join(rbuck, "_bucket").filter(
-        (F.col(right_ns) >= F.col(left_ns) - F.lit(lower_ns))
-        & (F.col(right_ns) <= F.col(left_ns) + F.lit(upper_ns))
-    )
-    return joined.drop("_bucket")
-
-
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,

@@ -1336,10 +1336,9 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both must produce identical labels, so this row value-grades the star
     variant against the same recursive-CTE oracle — previously it was
     property-tested only (vs union-find, pytest). Star is the fallback for
-    adversarial long-diameter graphs (O(log n) rounds vs O(diameter));
-    deliberately NOT in bench.py's headline set — on LSH quasi-clique
-    graphs propagation is the measured-faster default (BASELINE.md CC
-    comparison table)."""
+    adversarial long-diameter graphs (O(log n) rounds vs O(diameter)); on
+    LSH quasi-clique graphs propagation is the measured-faster default
+    (BASELINE.md CC comparison table), so `dedup_clusters` keeps it."""
     return _cc_cluster_frame(spark, sf_dir, "star")
 
 

@@ -13,50 +13,26 @@ from pyspark.sql import functions as F
 from .schemas import POSITION
 
 
-def _feature_collection(features: DataFrame) -> tuple[str, int]:
-    body = F.to_json(F.struct(*[c for c in features.columns if c != POSITION]))
-    rows = sorted(features.select(POSITION, body).collect(), key=itemgetter(0))
-    doc = '{"type":"FeatureCollection","features":[' + ",".join(r[1] for r in rows) + "]}"
-    return doc, len(rows)
-
-
-def feature_collection_json(features: DataFrame) -> str:
-    """Assemble the single FeatureCollection document for the batch.
+def submit(features: DataFrame, post_fn: Callable[[str], None]) -> int:
+    """`submit()` equivalent (task.ts:257): POST the batch's single
+    FeatureCollection document. Returns the feature count (the reference
+    logs ids.size, task.ts:251).
 
     The reference emits ONE document per tick (task.ts:252-255), so a
     driver-side collect of the (already deduped, O(10³-10⁴) row) feature set
     is the correct shape — this is the one place `collect()` is legitimate.
-    For unbounded outputs use ``write_json`` instead.
 
     One Spark action: the features' ``to_json`` strings are collected,
     ordered by ``POSITION`` on the driver (a global ``orderBy`` would add
-    a range-partition sampling job) and joined as they are. The document
-    therefore carries Spark's JSON text: raw UTF-8 rather than ``\\uXXXX``
-    escapes, and Java's double formatting (``1.0E-5``).
+    a range-partition sampling job) and joined as they are; the count is
+    the number of collected rows. The document therefore carries Spark's
+    JSON text: raw UTF-8 rather than ``\\uXXXX`` escapes, and Java's double
+    formatting (``1.0E-5``).
     """
-    return _feature_collection(features)[0]
-
-
-def submit(features: DataFrame, post_fn: Callable[[str], None]) -> int:
-    """`submit()` equivalent (task.ts:257): POST the FeatureCollection.
-    Returns the feature count (the reference logs ids.size, task.ts:251),
-    counted from the rows of the document's one collect — no second
-    action."""
-    doc, n = _feature_collection(features)
-    post_fn(doc)
-    return n
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: list[str] | None = None) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    body = F.to_json(F.struct(*[c for c in features.columns if c != POSITION]))
+    rows = sorted(features.select(POSITION, body).collect(), key=itemgetter(0))
+    post_fn('{"type":"FeatureCollection","features":[' + ",".join(r[1] for r in rows) + "]}")
+    return len(rows)
 
 
 def write_corpus(
@@ -237,7 +213,7 @@ def write_corpus_atomic(
     Scope honesty: the commit step is ``os.rename``, atomic on a POSIX
     filesystem (and on HDFS via the equivalent NameNode op). Object
     stores (S3/GCS) have NO atomic directory rename — there, use the
-    marker-file protocol (``exactly_once_batch_sink(commit="marker")``):
+    marker-file protocol (``exactly_once_batch_sink``):
     staging write + manifest verify, then a single-PUT commit marker
     instead of the directory flip — exactly the pointer-commit protocol
     of table formats like Iceberg/Delta. The Spark-side plan is
@@ -313,29 +289,13 @@ def corpus_diff_content(
     )
 
 
-def exactly_once_batch_sink(
-    path: str,
-    partition_by: list[str] | None = None,
-    commit: str = "rename",
-    **write_kwargs,
-):
+def exactly_once_batch_sink(path: str, commit: str = "marker"):
     """``foreachBatch`` sink with EXACTLY-ONCE publication per batchId —
     the task-retry story at the sink. Structured Streaming's foreachBatch
     is at-least-once: after a driver failure the restarted query RE-FIRES
-    the last unacknowledged batch with the SAME batchId. Two commit
-    protocols, selected by ``commit``:
+    the last unacknowledged batch with the SAME batchId.
 
-    ``commit="rename"`` (POSIX/HDFS fast path): the committed unit is a
-    per-batch directory whose atomic ``os.rename`` from staging IS the
-    commit record:
-
-    - batch dir ``<path>/batch=<id>`` already exists → the batch is
-      committed; the replay is a NO-OP (the corpus stays byte-identical).
-    - else: write to ``<path>/.staging-<id>`` (an interrupted previous
-      attempt's leftover staging is removed first — its batch was, by
-      the rename protocol, never committed), then rename into place.
-
-    ``commit="marker"`` (object-store-safe: S3-class stores have NO
+    The commit protocol is object-store-safe (S3-class stores have NO
     atomic directory rename): each ATTEMPT writes its data under an
     attempt-unique prefix ``batch=<id>/attempt=<token>`` (so two
     concurrent attempts of the same batchId — the zombie-driver replay
@@ -360,48 +320,25 @@ def exactly_once_batch_sink(
       are invisible to readers either way, because readers list markers,
       never data prefixes.
 
-    This Python layer never renames in marker mode (pinned by a
-    monkeypatched-``os.rename`` test). Scope honesty: Spark's OWN file
-    committer may still rename task files inside the batch write — on a
-    real object store pair this sink with an S3A "magic"/zero-rename
-    committer. Durability: every data file is fsynced (and the
-    attempt + batch directory entries flushed) BEFORE the marker PUT,
-    so a durable marker never references non-durable objects on a
-    POSIX host; on a real object store PUT visibility already implies
-    durability and the fsyncs degrade to no-ops.
-
-    Readers see only fully-committed batches: rename mode globs
-    ``batch=*`` dirs (staging is dot-prefixed, which Spark's file index
-    skips); marker mode lists markers and reads exactly the attempt
-    prefixes they name.
+    This Python layer never renames (pinned by a monkeypatched-
+    ``os.rename`` test). Scope honesty: Spark's OWN file committer may
+    still rename task files inside the batch write — on a real object
+    store pair this sink with an S3A "magic"/zero-rename committer.
+    Durability: every data file is fsynced (and the attempt + batch
+    directory entries flushed) BEFORE the marker PUT, so a durable
+    marker never references non-durable objects on a POSIX host; on a
+    real object store PUT visibility already implies durability and the
+    fsyncs degrade to no-ops.
 
     Returns the (df, batch_id) callable for
-    ``writeStream.foreachBatch(...)``. ``partition_by`` routes through
-    the small-file-safe ``write_corpus``; without it the batch is a
-    plain parquet write. A ``POSITION`` column is never written."""
+    ``writeStream.foreachBatch(...)``; read the corpus back with
+    ``read_committed_batches``. Each batch is a plain parquet write; a
+    ``POSITION`` column is never written. ``commit`` names the protocol
+    and accepts only ``"marker"``."""
     import os
-    import shutil
 
-    if commit not in ("rename", "marker"):
+    if commit != "marker":
         raise ValueError(f"unknown commit protocol: {commit!r}")
-
-    def write_batch(df: DataFrame, target: str) -> None:
-        df = df.drop(POSITION)  # a feature's tick position is not data
-        if partition_by:
-            write_corpus(df, target, partition_by, **write_kwargs)
-        else:
-            df.write.mode("overwrite").parquet(target, **write_kwargs)
-
-    def sink_rename(df: DataFrame, batch_id: int) -> None:
-        final = os.path.join(path, f"batch={batch_id}")
-        if os.path.exists(final):
-            return  # committed by a previous attempt — idempotent replay
-        staging = os.path.join(path, f".staging-{batch_id}")
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        write_batch(df, staging)
-        os.makedirs(path, exist_ok=True)
-        os.rename(staging, final)
 
     def sink_marker(df: DataFrame, batch_id: int) -> None:
         import hashlib
@@ -420,7 +357,8 @@ def exactly_once_batch_sink(
             os.unlink(marker)
         token = uuid.uuid4().hex[:16]
         attempt_dir = os.path.join(final, f"attempt={token}")
-        write_batch(df, attempt_dir)
+        # a feature's tick position is not data
+        df.drop(POSITION).write.mode("overwrite").parquet(attempt_dir)
         # manifest + durability in one pass: size and sha256 every data
         # object, fsync it, then flush the directory entries — only THEN
         # may the marker become durable (a durable marker must never
@@ -493,7 +431,7 @@ def exactly_once_batch_sink(
             if entry != f"attempt={token}":
                 _rm_objects(os.path.join(final, entry))
 
-    return sink_rename if commit == "rename" else sink_marker
+    return sink_marker
 
 
 def _load_marker(marker: str) -> dict | None:
@@ -535,71 +473,41 @@ def _marker_path(path: str, batch_id: int | str) -> str:
     return os.path.join(path, f"_COMMITTED.{batch_id}")
 
 
-def read_committed_batches(
-    spark, path: str, commit: str = "auto", verify: str = "size"
-) -> DataFrame:
+def read_committed_batches(spark, path: str, verify: str = "size") -> DataFrame:
     """Read every COMMITTED batch of an ``exactly_once_batch_sink``
-    corpus. ``commit="auto"`` (default) detects the protocol from the
-    corpus itself: ``_COMMITTED.*`` markers present → marker mode, else
-    rename mode — so a caller can never accidentally glob a marker-mode
-    corpus's torn prefixes by forgetting the write-side mode. Passing
-    ``commit="rename"`` explicitly on a corpus that HAS markers raises
-    (that read would expose exactly the uncommitted prefixes the marker
-    protocol makes invisible).
-
-    Rename mode: glob ``batch=*`` dirs (staging is dot-prefixed, which
-    Spark's file index skips; the ``batch=<id>`` dirs read back as a
-    hive partition column). Marker mode: list ``_COMMITTED.*`` markers
-    and read exactly the attempt prefixes they name — a data prefix
-    without a marker is an uncommitted torn write and stays invisible;
-    a MARKER whose manifest names a missing/short object is corruption
-    and fails loudly before any row is served. ``verify="hash"``
-    additionally re-hashes every committed object against the
-    manifest's sha256 (full-scan cost — for audits; ``"size"`` is the
-    steady-state check). Markers from the pre-attempt format (no
-    ``attempt`` field, sizes as plain ints) still resolve."""
+    corpus: list the ``_COMMITTED.*`` markers and read exactly the
+    attempt prefixes they name (the ``batch=<id>`` dirs read back as a
+    hive partition column). A data prefix without a marker is an
+    uncommitted torn write and stays invisible; a MARKER whose manifest
+    names a missing/short object is corruption and fails loudly before
+    any row is served. ``verify="hash"`` additionally re-hashes every
+    committed object against the manifest's sha256 (full-scan cost — for
+    audits; ``"size"`` is the steady-state check)."""
     import glob as _glob
     import hashlib
     import os
 
-    markers = sorted(_glob.glob(_marker_path(path, "*")))
-    if commit == "auto":
-        commit = "marker" if markers else "rename"
-    elif commit == "rename" and markers:
-        raise ValueError(
-            f"{path!r} holds _COMMITTED.* markers (a marker-mode corpus): "
-            "reading it with commit='rename' would glob batch=* and expose "
-            "uncommitted torn prefixes — pass commit='marker' (or the "
-            "default 'auto')"
-        )
-    if commit not in ("rename", "marker"):
-        raise ValueError(f"unknown commit protocol: {commit!r}")
     if verify not in ("size", "hash"):
         raise ValueError(f"unknown verify level: {verify!r}")
-    if commit == "rename":
-        return spark.read.option("basePath", path).parquet(path + "/batch=*")
-    dirs, depths = [], set()
-    for marker in markers:
+    dirs = []
+    for marker in sorted(_glob.glob(_marker_path(path, "*"))):
         meta = _load_marker(marker)
         if meta is None:
             # torn marker (crash mid-PUT): the batch is UNCOMMITTED —
             # the sink's replay heals it; skip it here so the corpus
             # stays readable in the meantime
             continue
-        batch_dir = os.path.join(path, f"batch={meta['batch_id']}")
-        attempt = meta.get("attempt")
-        depths.add(attempt is None)
-        if attempt is not None:
-            batch_dir = os.path.join(batch_dir, f"attempt={attempt}")
+        attempt_dir = os.path.join(
+            path, f"batch={meta['batch_id']}", f"attempt={meta['attempt']}"
+        )
         for rel, info in meta["files"].items():
-            size = info["bytes"] if isinstance(info, dict) else info
-            fp = os.path.join(batch_dir, rel)
-            if not os.path.exists(fp) or os.path.getsize(fp) != size:
+            fp = os.path.join(attempt_dir, rel)
+            if not os.path.exists(fp) or os.path.getsize(fp) != info["bytes"]:
                 raise ValueError(
                     f"committed batch {meta['batch_id']} is missing or has a "
-                    f"short object: {rel} (marker says {size} bytes)"
+                    f"short object: {rel} (marker says {info['bytes']} bytes)"
                 )
-            if verify == "hash" and isinstance(info, dict) and "sha256" in info:
+            if verify == "hash":
                 h = hashlib.sha256()
                 with open(fp, "rb") as fh:
                     for chunk in iter(lambda: fh.read(1 << 20), b""):
@@ -609,16 +517,9 @@ def read_committed_batches(
                         f"committed batch {meta['batch_id']} object {rel} "
                         "fails its manifest sha256 — corruption"
                     )
-        dirs.append(batch_dir)
+        dirs.append(attempt_dir)
     if not dirs:
-        # zero committed batches: falling back to the batch=* glob would
-        # expose torn uncommitted prefixes — fail loudly instead
+        # zero committed batches: reading the batch=* prefixes would
+        # expose torn uncommitted writes — fail loudly instead
         raise ValueError(f"no committed batches under {path!r}")
-    if len(depths) > 1:
-        raise ValueError(
-            f"{path!r} mixes pre-attempt and attempt-format markers — "
-            "Spark's partition discovery cannot mix directory depths under "
-            "one basePath; migrate or read the generations separately"
-        )
-    df = spark.read.option("basePath", path).parquet(*dirs)
-    return df.drop("attempt") if "attempt" in df.columns else df
+    return spark.read.option("basePath", path).parquet(*dirs).drop("attempt")

@@ -14,10 +14,6 @@ from pyspark.sql.types import StructField, StringType, StructType
 from ..schemas import ENVELOPE_SCHEMA
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def parse_envelope(payload: DataFrame, col: str = "value", strict: bool = True) -> DataFrame:
     """Parse raw JSON payload strings into validated envelope rows and
     explode the aircraft array (R4), adding the ingestion-order `_idx`

@@ -8,8 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from .schemas import DRIVER_TABLES
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a driver table.
@@ -39,7 +37,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", t
         )
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in DRIVER_TABLES}

@@ -105,30 +105,6 @@ def test_empty_fit_frame_raises(spark):
         fit_logreg(feats, "_x", "_y", dim=6, steps=1)
 
 
-def test_local_fit_matches_distributed_and_is_deterministic(spark):
-    """The one-job ``mode="local"`` fit (round-6 verdict #5: batch the
-    30-barrier fit) agrees with the exact-decimal distributed fit to
-    float-accumulation tolerance and is bitwise deterministic under
-    repartitioning (the kernel sorts rows before accumulating)."""
-    from etl_adsbx_spark.functions.classify import fit_quality_classifier
-
-    docs = _labeled(spark)
-    w_d, l_d = fit_quality_classifier(docs, "label", steps=20)
-    w_l, l_l = fit_quality_classifier(docs, "label", steps=20, mode="local")
-    assert max(abs(a - b) for a, b in zip(w_d, w_l)) < 1e-9
-    assert max(abs(a - b) for a, b in zip(l_d, l_l)) < 1e-9
-    w_l2, _ = fit_quality_classifier(
-        docs.repartition(7), "label", steps=20, mode="local"
-    )
-    assert w_l == w_l2  # bitwise: in-kernel sort fixes accumulation order
-    import pytest
-
-    with pytest.raises(ValueError, match="mode"):
-        fit_quality_classifier(docs, "label", mode="nope")
-    with pytest.raises(ValueError, match="empty"):
-        fit_quality_classifier(docs.limit(0), "label", mode="local")
-
-
 def test_exact_fit_heldout_accuracy_and_invariance(spark):
     """The driver-graded `quality_logreg` row's two promises beyond the
     oracle hash: (a) the fitted gate actually CLASSIFIES — 100% held-out

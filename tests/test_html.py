@@ -1,15 +1,11 @@
 """HTML→text extraction kernel + Spark plumbing (functions/html.py).
 Layer model: exact-output tests on crafted markup (the BPE
 python-reference precedent), malformed-input robustness, and parity
-between the pandas_udf and mapInPandas plumbings."""
+between the pandas_udf plumbing and the kernel."""
 
 from __future__ import annotations
 
-from etl_adsbx_spark.functions.html import (
-    extract_html_text,
-    extract_html_text_mapin,
-    html_to_text_py,
-)
+from etl_adsbx_spark.functions.html import extract_html_text, html_to_text_py
 
 
 def test_kernel_exact_cases():
@@ -70,12 +66,7 @@ def test_spark_plumbing_parity(spark):
         (4, "plain, no tags"),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, html string")
-    a = {
-        r["doc_id"]: r["text"]
-        for r in extract_html_text(df, drop_html=True).collect()
-    }
-    b = {r["doc_id"]: r["text"] for r in extract_html_text_mapin(df).collect()}
-    want = {i: html_to_text_py(h) for i, h in rows}
-    assert a == want and b == want
-    # mapInPandas drops the markup column inside the batch
-    assert extract_html_text_mapin(df).columns == ["doc_id", "text"]
+    out = extract_html_text(df, drop_html=True)
+    a = {r["doc_id"]: r["text"] for r in out.collect()}
+    assert a == {i: html_to_text_py(h) for i, h in rows}
+    assert out.columns == ["doc_id", "text"]

@@ -1,7 +1,7 @@
 """Unicode normalization kernel + Spark plumbing (functions/normalize.py).
 Layer model (the html-kernel precedent): exact-output tests on crafted
 unicode vectors, never-raises robustness, idempotence property, and
-parity between the pandas_udf and mapInPandas plumbings."""
+parity between the pandas_udf plumbing and the kernel."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import unicodedata
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from etl_adsbx_spark.functions.normalize import (
-    normalize_text,
-    normalize_text_mapin,
-    normalize_text_py,
-)
+from etl_adsbx_spark.functions.normalize import normalize_text, normalize_text_py
 
 
 def test_kernel_exact_cases():
@@ -118,11 +114,7 @@ def test_spark_plumbing_parity(spark):
         (4, "plain"),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    a = {
-        r["doc_id"]: r["text_norm"]
-        for r in normalize_text(df, drop_input=True).collect()
-    }
-    b = {r["doc_id"]: r["text_norm"] for r in normalize_text_mapin(df).collect()}
-    want = {i: normalize_text_py(t) for i, t in rows}
-    assert a == want and b == want
-    assert "text" not in normalize_text_mapin(df).columns
+    out = normalize_text(df, drop_input=True)
+    a = {r["doc_id"]: r["text_norm"] for r in out.collect()}
+    assert a == {i: normalize_text_py(t) for i, t in rows}
+    assert out.columns == ["doc_id", "text_norm"]

@@ -1,13 +1,22 @@
 """Schema-validated ingestion (R4: FAILFAST vs PERMISSIVE quarantine),
-HTTP micro-batch source with injected fetch, FeatureCollection sink."""
+the schema introspection endpoint (R30), HTTP micro-batch source with
+injected fetch, FeatureCollection sink."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
+from pyspark.sql.types import StructType
 
-from etl_adsbx_spark.sinks import feature_collection_json, submit
+from etl_adsbx_spark.schemas import (
+    ADSB_SCHEMA,
+    ENVELOPE_SCHEMA,
+    FEATURE_SCHEMA,
+    INCLUDES_SCHEMA,
+    schema_registry,
+)
+from etl_adsbx_spark.sinks import submit
 from etl_adsbx_spark.sources.files import parse_envelope, quarantine
 from etl_adsbx_spark.sources.http import build_url, fetch_batch
 
@@ -42,6 +51,24 @@ def test_permissive_quarantine(spark):
     raw = spark.createDataFrame([(GOOD,), (BAD,)], "value string")
     bad = quarantine(raw).collect()
     assert len(bad) == 1 and "broken" in bad[0]["raw"]
+
+
+def test_schema_registry_mirrors_reference_schema():
+    """R30: the reference ``schema()`` (task.ts:100-113) answers five
+    (type, flow) pairs — the validated envelope and its rows in, the
+    includes config, the features out — and the job has no outgoing
+    flow, so ``output:outgoing`` is the empty schema. Every entry
+    round-trips through ``StructType.json()``."""
+    reg = schema_registry()
+    assert reg == {
+        "input:incoming": ENVELOPE_SCHEMA,
+        "input:rows": ADSB_SCHEMA,
+        "config:includes": INCLUDES_SCHEMA,
+        "output:incoming": FEATURE_SCHEMA,
+        "output:outgoing": StructType([]),
+    }
+    for schema in reg.values():
+        assert StructType.fromJson(json.loads(schema.json())) == schema
 
 
 def test_http_fetch_batch_with_injected_fetch(spark):
@@ -86,13 +113,12 @@ def test_feature_collection_sink(spark):
     feats = to_features(
         control(aircraft_df(spark), includes_df(spark), batch_time=BATCH_TIME)
     )
-    doc = json.loads(feature_collection_json(feats))
-    assert doc["type"] == "FeatureCollection"
-    assert {f["id"] for f in doc["features"]} == {"n100aa", "n200hh", "n300ll"}
-
     posts = []
     n = submit(feats, posts.append)
     assert n == 3 and len(posts) == 1
+    doc = json.loads(posts[0])
+    assert doc["type"] == "FeatureCollection"
+    assert {f["id"] for f in doc["features"]} == {"n100aa", "n200hh", "n300ll"}
 
 
 def test_write_corpus_partitioned_file_budget(spark, tmp_path):

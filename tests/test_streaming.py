@@ -841,45 +841,9 @@ def _tree_digest(root):
     return h.hexdigest()
 
 
-def test_exactly_once_batch_sink_replay_is_byte_identical(spark):
-    """foreachBatch is at-least-once: a restarted query RE-FIRES the last
-    batch with the same batchId. The batchId-keyed rename-commit sink
-    must make the replay a no-op — corpus tree byte-identical — and an
-    INTERRUPTED first attempt (staging left behind, never renamed) must
-    be invisible to readers and cleanly retried."""
-    import os
-
-    from etl_adsbx_spark.sinks import exactly_once_batch_sink, read_committed_batches
-
-    root = tempfile.mkdtemp() + "/corpus"
-    sink = exactly_once_batch_sink(root)
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
-    b1 = spark.createDataFrame([(3, "c")], "id bigint, v string")
-    sink(b0, 0)
-    sink(b1, 1)
-    before = _tree_digest(root)
-    # replay both ticks (same batchIds) — e.g. post-failure re-fire
-    sink(b0, 0)
-    sink(b1, 1)
-    assert _tree_digest(root) == before
-    got = {
-        (r["id"], r["v"], r["batch"])
-        for r in read_committed_batches(spark, root).collect()
-    }
-    assert got == {(1, "a", 0), (2, "b", 0), (3, "c", 1)}
-    # interrupted attempt: staging exists but was never renamed
-    os.makedirs(os.path.join(root, ".staging-2"))
-    with open(os.path.join(root, ".staging-2", "part-junk.parquet"), "w") as f:
-        f.write("torn write")
-    assert read_committed_batches(spark, root).count() == 3  # invisible
-    sink(spark.createDataFrame([(4, "d")], "id bigint, v string"), 2)
-    assert not os.path.exists(os.path.join(root, ".staging-2"))
-    assert read_committed_batches(spark, root).count() == 4
-
-
 def test_marker_commit_sink_is_rename_free_and_torn_write_safe(spark, monkeypatch):
-    """The object-store-safe protocol (commit="marker"): S3-class stores
-    have no atomic directory rename, so the commit record is a single
+    """The object-store-safe marker protocol: S3-class stores have no
+    atomic directory rename, so the commit record is a single
     _COMMITTED.<id> marker PUT after the data lands. This suite runs the
     sink against a RENAME-LESS filesystem shim — os.rename/os.replace/
     shutil.move raise — and checks the three failure shapes:
@@ -896,7 +860,7 @@ def test_marker_commit_sink_is_rename_free_and_torn_write_safe(spark, monkeypatc
     from etl_adsbx_spark.sinks import exactly_once_batch_sink, read_committed_batches
 
     root = tempfile.mkdtemp() + "/corpus"
-    sink = exactly_once_batch_sink(root, commit="marker")
+    sink = exactly_once_batch_sink(root)
     b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string")
     b1 = spark.createDataFrame([(3, "c")], "id bigint, v string")
 
@@ -919,7 +883,7 @@ def test_marker_commit_sink_is_rename_free_and_torn_write_safe(spark, monkeypatc
     assert _tree_digest(root) == before
     got = {
         (r["id"], r["v"], r["batch"])
-        for r in read_committed_batches(spark, root, commit="marker").collect()
+        for r in read_committed_batches(spark, root).collect()
     }
     assert got == {(1, "a", 0), (2, "b", 0), (3, "c", 1)}
     monkeypatch.undo()
@@ -930,11 +894,11 @@ def test_marker_commit_sink_is_rename_free_and_torn_write_safe(spark, monkeypatc
     os.makedirs(os.path.join(torn, "half=x"))
     with open(os.path.join(torn, "half=x", "part-junk.parquet"), "w") as f:
         f.write("torn write")
-    assert read_committed_batches(spark, root, commit="marker").count() == 3
+    assert read_committed_batches(spark, root).count() == 3
     sink(spark.createDataFrame([(4, "d")], "id bigint, v string"), 2)
     assert os.path.exists(os.path.join(root, "_COMMITTED.2"))
     assert not os.path.exists(os.path.join(torn, "half=x"))
-    assert read_committed_batches(spark, root, commit="marker").count() == 4
+    assert read_committed_batches(spark, root).count() == 4
 
     # TORN MARKER (crash between O_EXCL create and the write): must read
     # as UNCOMMITTED — readers skip it, the replay heals it
@@ -942,11 +906,11 @@ def test_marker_commit_sink_is_rename_free_and_torn_write_safe(spark, monkeypatc
     sink(b3, 3)
     with open(os.path.join(root, "_COMMITTED.4"), "w"):
         pass  # empty marker, no batch=4 data
-    assert read_committed_batches(spark, root, commit="marker").count() == 5
+    assert read_committed_batches(spark, root).count() == 5
     sink(spark.createDataFrame([(6, "f")], "id bigint, v string"), 4)
     marker4 = json.load(open(os.path.join(root, "_COMMITTED.4")))
     assert marker4["n_files"] >= 1  # healed: real marker after the rewrite
-    assert read_committed_batches(spark, root, commit="marker").count() == 6
+    assert read_committed_batches(spark, root).count() == 6
 
     # corruption: shorten a committed object → the manifest check trips
     marker = json.load(open(os.path.join(root, "_COMMITTED.2")))
@@ -957,29 +921,28 @@ def test_marker_commit_sink_is_rename_free_and_torn_write_safe(spark, monkeypatc
     with open(victim, "wb") as f:
         f.write(b"short")
     with pytest.raises(ValueError, match="short object"):
-        read_committed_batches(spark, root, commit="marker").count()
+        read_committed_batches(spark, root).count()
 
 
 def test_marker_commit_race_and_read_mode_guards(spark, monkeypatch):
-    """The concurrent-replay race and the read-side mode guards:
+    """The concurrent-replay race and the read-side guards:
 
     - losing the O_EXCL marker PUT (a rival attempt committed between
       this attempt's data write and its PUT) must NOT crash: the loser
       re-validates the rival's marker, garbage-collects its own
       attempt-unique prefix, and returns — readers resolve the rival's
       attempt through the marker;
-    - commit="auto" (the read default) detects marker corpora, so a
-      caller can't accidentally glob torn prefixes; commit="rename" on a
-      marker corpus raises;
     - verify="hash" re-hashes every object against the manifest sha256
-      and trips on a same-size bitflip that the size check passes."""
+      and trips on a same-size bitflip that the size check passes;
+    - the marker protocol is the only one: any other ``commit`` raises,
+      as does an unknown ``verify`` level."""
     import json
     import os
 
     from etl_adsbx_spark.sinks import exactly_once_batch_sink, read_committed_batches
 
     root = tempfile.mkdtemp() + "/corpus"
-    sink = exactly_once_batch_sink(root, commit="marker")
+    sink = exactly_once_batch_sink(root)
     sink(spark.createDataFrame([(1, "a")], "id bigint, v string"), 0)
 
     # --- lost race: a rival's valid marker lands between this attempt's
@@ -1006,13 +969,14 @@ def test_marker_commit_race_and_read_mode_guards(spark, monkeypatch):
     leftovers = os.listdir(os.path.join(root, "batch=1"))
     assert leftovers in ([], [f"attempt={rival['attempt']}"]), leftovers
 
-    # --- read-mode guards (fresh corpus with real committed data)
+    # --- option guards, then a fresh corpus with real committed data
+    with pytest.raises(ValueError, match="commit protocol"):
+        exactly_once_batch_sink(root, commit="posix")
     root2 = tempfile.mkdtemp() + "/corpus"
-    sink2 = exactly_once_batch_sink(root2, commit="marker")
+    sink2 = exactly_once_batch_sink(root2)
     sink2(spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, v string"), 0)
-    assert read_committed_batches(spark, root2).count() == 2  # auto → marker
-    with pytest.raises(ValueError, match="marker-mode corpus"):
-        read_committed_batches(spark, root2, commit="rename")
+    with pytest.raises(ValueError, match="verify level"):
+        read_committed_batches(spark, root2, verify="none")
     assert read_committed_batches(spark, root2, verify="hash").count() == 2
 
     # --- same-size bitflip: size check passes, hash check trips
@@ -1026,27 +990,14 @@ def test_marker_commit_race_and_read_mode_guards(spark, monkeypatch):
     with pytest.raises(ValueError, match="sha256"):
         read_committed_batches(spark, root2, verify="hash").count()
 
-    # --- pre-attempt-format markers (data straight under batch=<id>,
-    # manifest sizes as plain ints) still resolve
-    root3 = tempfile.mkdtemp() + "/corpus"
-    b = spark.createDataFrame([(7, "g")], "id bigint, v string")
-    b.write.parquet(os.path.join(root3, "batch=0"))
-    files = {
-        f: os.path.getsize(os.path.join(root3, "batch=0", f))
-        for f in os.listdir(os.path.join(root3, "batch=0"))
-        if not f.startswith(".") and not f.startswith("_")
-    }
-    with open(os.path.join(root3, "_COMMITTED.0"), "w") as fh:
-        json.dump({"batch_id": 0, "n_files": len(files), "files": files}, fh)
-    got = read_committed_batches(spark, root3).collect()
-    assert [(r["id"], r["v"], r["batch"]) for r in got] == [(7, "g", 0)]
-
 
 def test_exactly_once_sink_through_real_stream_restart(spark):
     """End-to-end: run a file stream through foreachBatch(exactly-once
     sink) with a checkpoint, stop, add a file, restart from the SAME
     checkpoint — every committed batch appears exactly once even though
-    restart semantics allow the engine to re-offer the last batch."""
+    restart semantics allow the engine to re-offer the last batch: one
+    ``_COMMITTED.<id>`` marker per batch, no attempt prefix that a marker
+    does not name, and every committed object passes its sha256."""
     import json
     import os
 
@@ -1083,10 +1034,21 @@ def test_exactly_once_sink_through_real_stream_restart(spark):
     add_file(2, [{"id": 3, "v": "c"}])
     run_once()  # restart from the same checkpoint
     rows = [
-        (r["id"], r["v"])
-        for r in read_committed_batches(spark, root).collect()
+        (r["id"], r["v"], r["batch"])
+        for r in read_committed_batches(spark, root, verify="hash").collect()
     ]
-    assert sorted(rows) == [(1, "a"), (2, "b"), (3, "c")]  # no duplicates
+    assert sorted(rows) == [(1, "a", 0), (2, "b", 1), (3, "c", 2)]  # no duplicates
+    entries = sorted(os.listdir(root))
+    assert entries == [
+        "_COMMITTED.0", "_COMMITTED.1", "_COMMITTED.2", "batch=0", "batch=1", "batch=2",
+    ], entries
+    for b in range(3):
+        with open(os.path.join(root, f"_COMMITTED.{b}")) as fh:
+            meta = json.load(fh)
+        assert meta["batch_id"] == b
+        assert os.listdir(os.path.join(root, f"batch={b}")) == [
+            f"attempt={meta['attempt']}"
+        ]
 
 
 def test_flagship_stream_sessions_parity_with_batch(spark):

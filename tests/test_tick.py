@@ -22,12 +22,7 @@ from etl_adsbx_spark.fixtures import (
 )
 from etl_adsbx_spark.pipeline import control, to_features, transform
 from etl_adsbx_spark.schemas import ADSB_SCHEMA, INCLUDES_SCHEMA, POSITION
-from etl_adsbx_spark.sinks import (
-    exactly_once_batch_sink,
-    feature_collection_json,
-    read_committed_batches,
-    submit,
-)
+from etl_adsbx_spark.sinks import exactly_once_batch_sink, read_committed_batches, submit
 from etl_adsbx_spark.sources.http import fetch_batch
 
 
@@ -73,7 +68,7 @@ def test_position_is_never_persisted(spark, tmp_path):
     feats = to_features(control(aircraft_df(spark), includes_df(spark), batch_time=BATCH_TIME))
     assert POSITION in feats.columns
     out = str(tmp_path / "out")
-    exactly_once_batch_sink(out, commit="marker")(feats, 0)
+    exactly_once_batch_sink(out)(feats, 0)
     back = read_committed_batches(spark, out)
     assert POSITION not in back.columns
     assert sorted(r["id"] for r in back.collect()) == ["n100aa", "n200hh", "n300ll"]
@@ -89,7 +84,9 @@ def test_document_equals_python_reencoding(spark):
         spark.createDataFrame(inc, INCLUDES_SCHEMA),
         batch_time=BATCH_TIME,
     ))
-    doc = feature_collection_json(feats)
+    posts: list[str] = []
+    submit(feats, posts.append)
+    doc = posts[0]
     # the document as json.loads/json.dumps re-encoded every feature
     cols = [c for c in feats.columns if c != POSITION]
     rows = feats.select(F.to_json(F.struct(*cols)).alias("j")).collect()
