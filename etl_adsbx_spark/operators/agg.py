@@ -519,7 +519,7 @@ def theta_set_report(
     """Release-over-release set analytics from two theta-sketch frames:
     per key group, estimated |old|, |new|, |union|, |intersection|,
     |new − old| (added), |old − new| (removed), and Jaccard. The
-    sketch-side complement of ``sinks.corpus_diff`` (exact id lists):
+    sketch-side complement of ``sinks.corpus_diff_content`` (exact ids):
     the exact diff joins two corpus-sized id sets — right for auditing a
     release; this costs a broadcast-size join of KB sketch rows — right
     for dashboards over years of 100-TB generations, ~2% error at the

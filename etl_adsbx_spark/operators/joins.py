@@ -488,8 +488,6 @@ def geo_radius_join(
     keyed dimension): the candidate-cell dedup is over (site row, cell),
     so duplicated site rows would collapse — the interval-overlap-join
     row-uniqueness contract."""
-    import math as _math
-
     from ..functions.scalar import haversine_km
 
     plat, plon = point_coords

@@ -410,89 +410,6 @@ def extract_features(media: DataFrame, decode_fn=None) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("mime", StringType(), False),
-        StructField("n_bytes_out", LongType(), False),
-        StructField("resized_sha", StringType(), False),
-    ]
-)
-
-
-def resize_media(media: DataFrame, target_bytes: int = 1024, decode_fn=None) -> DataFrame:
-    """mapInPandas resize. For synthetic octet-stream payloads the
-    deterministic fake is prefix-truncation to ``target_bytes`` (a
-    'thumbnail' is a smaller deterministic function of the payload); a
-    real deployment injects a Pillow `Image.resize` kernel via
-    ``decode_fn`` (default: auto-detected via ``default_decode_kernel``)."""
-    import hashlib
-
-    decode_fn = decode_fn or default_decode_kernel()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = [
-                decode_fn(p, m)[:target_bytes]
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes_out": [len(r) for r in resized],
-                    "resized_sha": [hashlib.sha256(r).hexdigest() for r in resized],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", LongType(), False),
-        StructField("n_frame_bytes", LongType(), False),
-        StructField("frame_md5", StringType(), False),
-    ]
-)
-
-
-def sample_frames(
-    media: DataFrame, frame_bytes: int = 256, every_n: int = 2, decode_fn=None
-) -> DataFrame:
-    """mapInPandas frame sampling (1 input row → many frame rows — the
-    UDTF-shaped fan-out a video pipeline needs). Kernel stub: a 'frame' is
-    the i-th ``frame_bytes`` chunk of the decoded payload; keep every
-    ``every_n``-th. A real deployment plugs ffmpeg keyframe extraction
-    here via ``decode_fn``. Output partitioning follows the input — at
-    100 TB size input partitions by payload bytes (maxPartitionBytes), and
-    the fan-out stays within-partition (no shuffle)."""
-    import hashlib
-
-    decode_fn = decode_fn or default_decode_kernel()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [],
-                "frame_idx": [],
-                "n_frame_bytes": [],
-                "frame_md5": [],
-            }
-            for mid, p, m in zip(pdf["media_id"], pdf["payload"], pdf["mime"]):
-                d = decode_fn(p, m)
-                for i in range(0, (len(d) + frame_bytes - 1) // frame_bytes, every_n):
-                    chunk = d[i * frame_bytes : (i + 1) * frame_bytes]
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["n_frame_bytes"].append(len(chunk))
-                    out["frame_md5"].append(hashlib.md5(chunk).hexdigest())
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
 KERNELS_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -511,12 +428,18 @@ def media_kernels_pass(
     every_n: int = 2,
     decode_fn=None,
 ) -> DataFrame:
-    """ALL kernels in ONE decode pass: each payload is decoded once and
-    emits its resize row (kernel='resize', frame_idx=-1, sha256) plus its
-    sampled frame rows (kernel='frame', md5 per chunk). At 100 TB the
-    decode dominates — running resize_media and sample_frames separately
-    would scan and decode every payload twice; this is the fused form.
-    ``decode_fn`` swaps the codec kernel without touching the fusion."""
+    """ALL kernels in ONE decode pass (mapInPandas): each payload is
+    decoded once and emits its resize row (kernel='resize',
+    frame_idx=-1, sha256 of the first ``target_bytes`` — for synthetic
+    octet-stream payloads a 'thumbnail' is that prefix) plus its sampled
+    frame rows (kernel='frame': the i-th ``frame_bytes`` chunk of the
+    decoded payload for every ``every_n``-th i, md5 per chunk — the
+    UDTF-shaped 1→N fan-out a video pipeline needs; for a y4m payload
+    with ``frame_bytes`` = the plane size a chunk IS a frame). At 100 TB
+    the decode dominates — separate resize and frame passes would scan
+    and decode every payload twice. ``decode_fn`` swaps the codec kernel
+    (default: ``default_decode_kernel``) without touching the fusion;
+    the fan-out stays within the input partition (no shuffle)."""
     import hashlib
 
     decode_fn = decode_fn or default_decode_kernel()

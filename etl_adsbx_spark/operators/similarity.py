@@ -14,7 +14,7 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..planprobe import pin, probe_step
+from ..planprobe import pin
 
 from ..functions.vector import as_double, dot, norm
 from ..operators.agg import topk_per_group
@@ -1195,18 +1195,18 @@ def pq_ann_topk(
     )
 
 
-def mmr_select(
+def mmr_select_grouped(
     cand: DataFrame,
     pair_sims: DataFrame,
     k: int = 8,
     lam: str = "0.7",
 ) -> DataFrame:
     """Maximal Marginal Relevance diversified top-k (Carbonell &
-    Goldstein SIGIR'98 — the standard redundancy-aware rerank between
-    retrieval and a RAG prompt): greedily pick, k times,
+    Goldstein SIGIR'98 — the redundancy-aware rerank between retrieval
+    and a RAG prompt): per query, greedily pick, k times,
     ``argmax_c  λ·sim(q,c) − (1−λ)·max_{s∈S} sim(c,s)`` over the not-yet-
-    selected candidates, where S is the picked set so far (empty diversity
-    term on the first pick).
+    selected candidates (S = picks so far; the max is 0 while no pair
+    sim is present; ties broken by cand_id ASC).
 
     Inputs (both per-query, rank-list-sized by construction):
       cand:      (query_id, cand_id, simq DECIMAL(8,6)) — the ≤N retrieval
@@ -1214,118 +1214,15 @@ def mmr_select(
       pair_sims: (query_id, a_id, b_id, sim DECIMAL(8,6)) — candidate-pair
                  sims within each query's list, BOTH directions present.
 
-    Exact-decimal contract: λ and (1−λ) are 1-dp decimals, simq/sim are
-    6-dp decimals, so every MMR score is an EXACT DECIMAL(12,7) — no
-    rounding inside the loop, no ties beyond true value ties (broken by
-    cand_id ASC), and a SQL oracle replays the k steps as chained CTEs.
+    λ and (1−λ) are 1-dp decimals and sims 6-dp decimals, so every score
+    is an EXACT DECIMAL(12,7) that a SQL oracle replays as k chained CTEs
+    (``mmr_rerank``). ONE shuffle co-groups each query's candidates with
+    its pair sims; an Arrow kernel runs the k greedy steps per query in
+    Python ``Decimal`` arithmetic (Arrow moves DECIMAL columns as true
+    decimals), so cost is independent of k and no float touches a score.
 
-    100-TB shape: the loop is k FIXED iterations of (anti-join + max-agg
-    + per-query row_number) over frames bounded by Q×N rows — it scales
-    in the #queries dimension like any keyed agg (never corpus-sized; the
-    corpus-sized work happened in candidate generation). Each step is
-    checkpointed so the final plan is step-local (the pagerank loop
-    hygiene). Python/driver never sees row data.
-
-    Returns (query_id, rank int 1..k, cand_id, simq, mmr DECIMAL(12,7)).
-    """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    lam_d = Decimal(lam)
-    if not (Decimal(0) < lam_d <= Decimal(1)) or lam_d != lam_d.quantize(
-        Decimal("0.1")
-    ):
-        raise ValueError(f"lam must be a 1-dp decimal in (0, 1], got {lam!r}")
-    lam_c = F.lit(lam_d).cast("decimal(2,1)")
-    omlam_c = F.lit(Decimal(1) - lam_d).cast("decimal(2,1)")
-    c0 = cand.select(
-        "query_id", "cand_id", F.col("simq").cast("decimal(8,6)").alias("simq")
-    ).localCheckpoint(eager=True)
-    ps = pair_sims.select(
-        "query_id", "a_id", "b_id", F.col("sim").cast("decimal(8,6)").alias("sim")
-    ).localCheckpoint(eager=True)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("mmr").desc(), F.col("cand_id").asc()
-    )
-    first = (
-        c0.select(
-            "query_id",
-            "cand_id",
-            "simq",
-            (lam_c * F.col("simq")).cast("decimal(12,7)").alias("mmr"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("query_id", F.lit(1).alias("rank"), "cand_id", "simq", "mmr")
-    )
-    picks = first.localCheckpoint(eager=True)
-    for i in range(2, k + 1):
-        sel = picks.select(
-            F.col("query_id").alias("_pq"), F.col("cand_id").alias("_pc")
-        )
-        remaining = c0.join(
-            sel,
-            (c0["query_id"] == F.col("_pq")) & (c0["cand_id"] == F.col("_pc")),
-            "left_anti",
-        )
-        div = (
-            ps.join(
-                sel,
-                (ps["query_id"] == F.col("_pq")) & (ps["b_id"] == F.col("_pc")),
-            )
-            .groupBy(ps["query_id"].alias("_dq"), ps["a_id"].alias("_da"))
-            .agg(F.max("sim").alias("_div"))
-        )
-        scored = remaining.join(
-            div,
-            (remaining["query_id"] == F.col("_dq"))
-            & (remaining["cand_id"] == F.col("_da")),
-            "left",
-        ).select(
-            "query_id",
-            "cand_id",
-            "simq",
-            (
-                lam_c * F.col("simq")
-                - omlam_c
-                * F.coalesce(F.col("_div"), F.lit(0).cast("decimal(8,6)"))
-            )
-            .cast("decimal(12,7)")
-            .alias("mmr"),
-        )
-        pick_i = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select("query_id", F.lit(i).alias("rank"), "cand_id", "simq", "mmr")
-        )
-        picks_pre = picks.unionByName(pick_i)
-        probe_step("mmr_select", f"step{i}", picks_pre)
-        prev, picks = picks, picks_pre.localCheckpoint(eager=True)
-        prev.unpersist()
-    return picks
-
-
-def mmr_select_grouped(
-    cand: DataFrame,
-    pair_sims: DataFrame,
-    k: int = 8,
-    lam: str = "0.7",
-) -> DataFrame:
-    """The grouped-map twin of ``mmr_select``: ONE shuffle co-groups each
-    query's candidate list with its pair-sim block, then an Arrow kernel
-    runs the whole k-step greedy loop per query in Python ``Decimal``
-    arithmetic — bit-identical to the DataFrame loop (parity-pinned in
-    tests/test_mmr.py) because both sides compute the same exact decimals.
-
-    WHEN TO USE WHICH: ``mmr_select`` is k driver-orchestrated tiny jobs —
-    right for the graded/oracle path and few-query batches; this form is
-    right at production query volume (millions of queries per tick): cost
-    is ONE query_id-keyed shuffle of rank-list-sized rows + an
-    embarrassingly-parallel per-group kernel, independent of k. Arrow
-    moves DECIMAL columns as true decimals (object-dtype
-    ``decimal.Decimal`` in pandas), so no float ever touches a score.
-
-    Returns the ``mmr_select`` schema:
-    (query_id, rank int, cand_id, simq DECIMAL(8,6), mmr DECIMAL(12,7)).
+    Returns (query_id, rank int 1..k, cand_id, simq DECIMAL(8,6),
+    mmr DECIMAL(12,7)).
     """
     import pandas as pd
 
@@ -1363,8 +1260,8 @@ def mmr_select_grouped(
                     continue
                 # True max over the PRESENT pair sims, 0 only when none
                 # exist — starting the max at Decimal(0) would clamp
-                # negative cosines and diverge from the DataFrame loop's
-                # max-agg + coalesce(_div, 0) semantics (real embedding
+                # negative cosines and diverge from the oracle's
+                # max-agg + coalesce(div, 0) semantics (real embedding
                 # cosines go negative; caught vs the oracle at sf0.01).
                 div = None
                 for s in chosen:

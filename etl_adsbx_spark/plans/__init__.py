@@ -1,1 +1,1 @@
-from . import corpus, flagship, monitor, rag, training  # noqa: F401
+from . import corpus, flagship, monitor, rag  # noqa: F401

@@ -18,8 +18,8 @@ sketch frame next to the manifest; comparing any two generations — this
 week vs last week, or vs two years ago — is a broadcast-size join of
 sketch rows. The raw-data alternative (self-join of two 100-TB trees)
 is exactly what the sketches exist to avoid. Compose with
-``sinks.corpus_diff`` when an AUDIT needs the exact id lists rather
-than estimates.
+``sinks.corpus_diff_content`` when an AUDIT needs the exact id lists
+rather than estimates.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import quality_score, token_count, tokens
-from ..operators.agg import quantile_drift, quantile_sketch, theta_set_report, theta_sketch
+from ..operators.agg import quantile_drift, theta_set_report
 
 
 def generation_sketches(

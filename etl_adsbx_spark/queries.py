@@ -5812,33 +5812,22 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=20,
         text_col="text",
         id_col="doc_id",
-    ).select("doc_id", F.col("lex_rank").cast("bigint").alias("lex_rank"))
+    ).select("query_id", "doc_id", F.col("lex_rank").cast("bigint").alias("lex_rank"))
     wv = Window.orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id").desc())
     vec = (
         cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=20)
         .select(
+            F.lit(0).alias("query_id"),
             F.col("neighbor_id").alias("doc_id"),
             F.row_number().over(wv).cast("bigint").alias("vec_rank"),
         )
     )
-    fused = (
-        lex.join(vec, "doc_id", "full_outer")
-        .withColumn(
-            "rrf_score",
-            F.round(
-                F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
-                + F.coalesce(
-                    F.lit(1.0) / (F.lit(60) + F.col("vec_rank")), F.lit(0.0)
-                ),
-                8,
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-    return (
-        fused.withColumn("rrf_rank", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rrf_rank") <= 10)
-        .select("doc_id", "rrf_score", "rrf_rank", "lex_rank", "vec_rank")
+    return rrf_fuse(lex, vec, k=10, id_col="doc_id").select(
+        "doc_id",
+        "rrf_score",
+        F.col("rrf_rank").cast("bigint").alias("rrf_rank"),
+        "lex_rank",
+        "vec_rank",
     )
 
 
@@ -7087,10 +7076,10 @@ def readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mmr_oracle(k: int, n_cand: int = 16) -> str:
-    """DuckDB replay of similarity.mmr_select as k chained CTE steps (the
-    _pagerank_oracle / _hits_oracle fixed-step pattern; MATERIALIZED —
-    DuckDB inlines plain CTEs and each step references the previous one
-    three times)."""
+    """DuckDB replay of similarity.mmr_select_grouped's k greedy steps as
+    chained CTEs (the _pagerank_oracle / _hits_oracle fixed-step pattern;
+    MATERIALIZED — DuckDB inlines plain CTEs and each step references the
+    previous one three times)."""
     step = """
     cand{i} AS MATERIALIZED (
       SELECT cd.query_id, cd.cand_id, cd.simq,
@@ -7168,8 +7157,8 @@ def _mmr_oracle(k: int, n_cand: int = 16) -> str:
 @register("mmr_rerank", oracle=_mmr_oracle(8))
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] MMR-diversified retrieval rerank (operators.similarity.
-    mmr_select — Carbonell & Goldstein SIGIR'98): for each query vector
-    (vec_id < 4), take the exact-cosine top-16 candidate list (the
+    mmr_select_grouped — Carbonell & Goldstein SIGIR'98): for each query
+    vector (vec_id < 4), take the exact-cosine top-16 candidate list (the
     ann_topk exact-leg construction), then greedily select 8 results by
     ``λ·sim(q,c) − (1−λ)·max_{s∈picked} sim(c,s)`` with λ=0.7 — the
     standard redundancy-aware stage between retrieval and a RAG prompt
@@ -7181,8 +7170,8 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB shape: the corpus-sized work is candidate generation (here the
     broadcast brute-force exact leg; at scale, the IVF/PQ path). The
     rerank itself only ever touches rank-list-sized frames (Q×16 rows,
-    Q×16×15 pair sims) — it scales in the #queries dimension like any
-    keyed agg, 8 fixed checkpointed steps, no driver-side row data."""
+    Q×16×15 pair sims) — one query_id-keyed shuffle into a per-query
+    Arrow kernel that runs the 8 steps, no driver-side row data."""
     e = load_table(spark, sf_dir, "embeddings")
     # Pin the candidate lists: cd feeds the MMR input AND both sides of
     # the pair-sim self-join — unpinned, each reference re-runs the
@@ -7822,9 +7811,8 @@ def _logreg_oracle(steps: int, lr: str) -> str:
 def quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] FITTED quality classifier (functions.classify.
     fit_logreg_exact) — the supervised quality gate of the standard
-    CommonCrawl curation recipe (CCNet / fastText-style filters; the
-    float-path ``fit_logreg`` is the production variant, pytest-graded
-    with tolerances). This row grades the EXACT-DECIMAL twin end to end:
+    CommonCrawl curation recipe (CCNet / fastText-style filters). This
+    row grades the package's one fit path end to end:
     4 full-batch gradient-descent steps at lr=4.0 under the registry's
     replay contract, fit on the 80% split (doc_id % 5 != 0), graded on
     HELD-OUT predictions — the ORACLE re-runs the entire fit as chained
@@ -7917,8 +7905,9 @@ def quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] robots.txt crawl gate (functions.url.robots_allowed) — the
-    politeness filter between WARC ingest and extraction, graded end to
+    """[EXT] robots.txt crawl gate (functions.url.
+    robots_allowed_for_hosts) — the politeness filter between WARC
+    ingest and extraction, graded end to
     end through the REAL stdlib evaluator. The corpus has no robots
     documents, so per-host robots.txt files are CONSTRUCTED in-query
     (the url_canonicalize precedent) across three regimes keyed on

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     LongType,
     StringType,

@@ -100,73 +100,6 @@ def write_corpus(
         raise ValueError(f"unsupported corpus file_format: {file_format!r}")
 
 
-def _footer_summary(path: str) -> dict[str, dict[str, int]]:
-    """Per hive-partition-directory {n_files, n_rows, n_bytes} from parquet
-    footers — never scans row data (~KB of metadata per file)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    parts: dict[str, dict[str, int]] = {}
-    for root, _dirs, files in os.walk(path):
-        pfiles = [f for f in files if f.endswith(".parquet")]
-        if not pfiles:
-            continue
-        rel = os.path.relpath(root, path)
-        ent = parts.setdefault(
-            rel if rel != "." else "", {"n_files": 0, "n_rows": 0, "n_bytes": 0}
-        )
-        for f in pfiles:
-            fp = os.path.join(root, f)
-            ent["n_files"] += 1
-            ent["n_rows"] += pq.ParquetFile(fp).metadata.num_rows
-            ent["n_bytes"] += os.path.getsize(fp)
-    return parts
-
-
-def write_manifest(path: str) -> dict:
-    """Write a ``_MANIFEST.json`` sidecar summarizing a parquet tree from
-    its footers: per hive-partition directory {n_files, n_rows, n_bytes}
-    plus totals. The ops half of a long-lived corpus: downstream
-    consumers reconcile row counts without scanning data, incremental
-    ingest records what each tick appended, and ``verify_manifest``
-    detects partial writes / lost files later. At real scale generate it
-    inside the same job that lists files for the write commit (the numbers
-    come from metadata either way). Returns the manifest dict."""
-    import json as _json
-    import os
-
-    parts = _footer_summary(path)
-    manifest = {
-        "partitions": parts,
-        "total_files": sum(p["n_files"] for p in parts.values()),
-        "total_rows": sum(p["n_rows"] for p in parts.values()),
-        "total_bytes": sum(p["n_bytes"] for p in parts.values()),
-    }
-    with open(os.path.join(path, "_MANIFEST.json"), "w") as fh:
-        _json.dump(manifest, fh, indent=1, sort_keys=True)
-    return manifest
-
-
-def verify_manifest(path: str) -> dict:
-    """Recompute the footer summary and compare to ``_MANIFEST.json``;
-    raises AssertionError naming the first diverging partition (missing
-    files, truncated rows, size drift). Returns the stored manifest on
-    success."""
-    import json as _json
-    import os
-
-    with open(os.path.join(path, "_MANIFEST.json")) as fh:
-        stored = _json.load(fh)
-    parts = _footer_summary(path)
-    for part, want in stored["partitions"].items():
-        got = parts.get(part)
-        assert got == want, f"partition {part!r}: manifest={want} actual={got}"
-    extra = set(parts) - set(stored["partitions"])
-    assert not extra, f"partitions not in manifest: {sorted(extra)}"
-    return stored
-
-
 def compact_parquet(
     spark,
     src: str,
@@ -197,72 +130,13 @@ def compact_parquet(
     return n_files
 
 
-def write_corpus_atomic(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    **write_kwargs,
-) -> dict:
-    """All-or-nothing corpus publish: write to a staging sibling, verify
-    the manifest against the freshly-written footers, then RENAME into
-    place — readers either see the previous complete corpus or the new
-    complete corpus, never a partial tree. A crashed writer leaves only
-    an orphaned ``.__staging__`` directory (safe to delete); the final
-    path flips in one metadata operation. Returns the manifest.
-
-    Scope honesty: the commit step is ``os.rename``, atomic on a POSIX
-    filesystem (and on HDFS via the equivalent NameNode op). Object
-    stores (S3/GCS) have NO atomic directory rename — there, use the
-    marker-file protocol (``exactly_once_batch_sink``):
-    staging write + manifest verify, then a single-PUT commit marker
-    instead of the directory flip — exactly the pointer-commit protocol
-    of table formats like Iceberg/Delta. The Spark-side plan is
-    identical either way; only the final metadata flip differs.
-    """
-    import os
-    import shutil
-
-    staging = path.rstrip("/") + ".__staging__"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)  # leftover from a crashed writer
-    write_corpus(df, staging, partition_by, **write_kwargs)
-    manifest = write_manifest(staging)
-    verify_manifest(staging)
-    prev = path.rstrip("/") + ".__prev__"
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
-    if os.path.exists(path):
-        os.rename(path, prev)
-    os.rename(staging, path)
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
-    return manifest
-
-
-def corpus_diff(old: DataFrame, new: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Run-to-run corpus delta: one row per id present in exactly one
-    side, tagged ``change`` = 'added' | 'removed'. The release-review
-    tool for a re-published corpus (what did the new dedup threshold /
-    quality gate actually change?). Two anti-joins on the id — each a
-    single equi-join shuffle, no collects; at 100 TB both sides prune to
-    the id column at the scan."""
-    o = old.select(F.col(id_col))
-    n = new.select(F.col(id_col))
-    return (
-        n.join(o, id_col, "left_anti").withColumn("change", F.lit("added"))
-        .unionByName(
-            o.join(n, id_col, "left_anti").withColumn("change", F.lit("removed"))
-        )
-    )
-
-
 def corpus_diff_content(
     old: DataFrame,
     new: DataFrame,
     id_col: str = "doc_id",
     content_col: str = "text",
 ) -> DataFrame:
-    """Content-aware corpus delta: ``corpus_diff`` extended with
+    """Content-aware run-to-run corpus delta: ids added, removed, and
     'changed' (same id, different content) via ONE full-outer equi-join
     on the id comparing content fingerprints — the re-publish review
     that also answers "which surviving documents did the new
@@ -272,8 +146,8 @@ def corpus_diff_content(
     Scale shape: both sides prune to (id, md5) at the scan — the join
     ships 2 narrow columns regardless of document size; one shuffle
     keyed on the id. The full-outer join is the right primitive here
-    (the anti-join pair of ``corpus_diff`` cannot see 'changed', and a
-    3-way union of anti/anti/inner would scan each side twice)."""
+    (a pair of id anti-joins cannot see 'changed', and a 3-way union of
+    anti/anti/inner would scan each side twice)."""
     o = old.select(F.col(id_col), F.md5(F.col(content_col)).alias("_oh"))
     n = new.select(F.col(id_col), F.md5(F.col(content_col)).alias("_nh"))
     return (

@@ -21,7 +21,7 @@ public WebDataset convention). The scale contract:
 At 100 TB: size ``spark.sql.files.maxPartitionBytes`` has no effect here
 (each tar is one file-row); instead keep shards at the usual 0.1-1 GB and
 let shard count drive parallelism. Re-sharding = read → repartition by
-key-hash → ``write_corpus_atomic``.
+key-hash → ``sinks.write_corpus``.
 """
 
 from __future__ import annotations

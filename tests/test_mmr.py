@@ -1,7 +1,8 @@
-"""MMR diversified rerank (operators.similarity.mmr_select): greedy
-semantics on crafted fixtures — diversity must demote a redundant
-runner-up — plus a pure-Python Decimal replay of the full loop. The
-registry row `mmr_rerank` adds the chained-CTE DuckDB oracle."""
+"""MMR diversified rerank (operators.similarity.mmr_select_grouped):
+greedy semantics on crafted fixtures — diversity must demote a redundant
+runner-up, negative pair sims must not be clamped — plus a pure-Python
+Decimal replay of the full loop. The registry row `mmr_rerank` adds the
+chained-CTE DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from decimal import Decimal
 
 import pytest
 
-from etl_adsbx_spark.operators.similarity import mmr_select
+from etl_adsbx_spark.operators.similarity import mmr_select_grouped
 
 
 def _cand(spark, rows):
@@ -33,7 +34,7 @@ def test_mmr_demotes_redundant_runner_up(spark):
     cand = _cand(spark, [(1, 1, _d("0.95")), (1, 2, _d("0.90")), (1, 3, _d("0.80"))])
     sym = [(1, 1, 2, _d("0.99")), (1, 1, 3, _d("0.10")), (1, 2, 3, _d("0.20"))]
     ps = _ps(spark, sym + [(q, b, a, s) for q, a, b, s in sym])
-    got = {r["rank"]: r for r in mmr_select(cand, ps, k=3).collect()}
+    got = {r["rank"]: r for r in mmr_select_grouped(cand, ps, k=3).collect()}
     assert [got[i]["cand_id"] for i in (1, 2, 3)] == [1, 3, 2]
     assert got[1]["mmr"] == _d("0.6650000")          # 0.7*0.95, empty S
     assert got[2]["mmr"] == _d("0.5300000")          # 0.7*0.80 - 0.3*0.10
@@ -49,7 +50,7 @@ def test_mmr_pure_relevance_when_lam_is_one(spark):
     )
     ps = _ps(spark, [(7, a, b, _d("0.999")) for a in (10, 11, 12, 13)
                      for b in (10, 11, 12, 13) if a != b])
-    got = mmr_select(cand, ps, k=4, lam="1.0").collect()
+    got = mmr_select_grouped(cand, ps, k=4, lam="1.0").collect()
     order = [r["cand_id"] for r in sorted(got, key=lambda r: r["rank"])]
     assert order == [11, 12, 13, 10]
 
@@ -57,16 +58,21 @@ def test_mmr_pure_relevance_when_lam_is_one(spark):
 def test_mmr_matches_python_reference(spark):
     """Full-loop Decimal replay on a 2-query, 6-candidate fixture with a
     deterministic-but-asymmetric-looking sim table (all values exact
-    decimals, like the graded row's round-6 inputs)."""
+    decimals, like the graded row's round-6 inputs). Query 3's pair sims
+    are partly NEGATIVE, as real embedding cosines are: the diversity
+    term is the max over the present sims, so it may go negative and
+    boost a candidate (a kernel that started its max at 0 would clamp
+    it; caught against the sf0.01 oracle)."""
     import itertools
 
-    cands = {1: [10, 11, 12, 13, 14, 15], 2: [20, 21, 22, 23]}
+    cands = {1: [10, 11, 12, 13, 14, 15], 2: [20, 21, 22, 23], 3: [30, 31, 32, 33]}
     simq = {(q, c): Decimal(f"0.{(c * 37) % 90 + 10:02d}") for q, cs in cands.items() for c in cs}
     sim = {}
     for q, cs in cands.items():
         for a, b in itertools.permutations(cs, 2):
             key = (min(a, b), max(a, b))
-            sim[(q, a, b)] = Decimal(f"0.{(key[0] * 13 + key[1] * 7) % 100:02d}")
+            mag = Decimal(f"0.{(key[0] * 13 + key[1] * 7) % 100:02d}")
+            sim[(q, a, b)] = -mag if q == 3 and sum(key) % 2 else mag
     lam, oml = Decimal("0.7"), Decimal("0.3")
     expect = {}
     for q, cs in cands.items():
@@ -85,82 +91,22 @@ def test_mmr_matches_python_reference(spark):
             expect[(q, rank)] = (best[1], best[2])
     cand_df = _cand(spark, [(q, c, simq[(q, c)]) for q, cs in cands.items() for c in cs])
     ps_df = _ps(spark, [(q, a, b, s) for (q, a, b), s in sim.items()])
-    got = mmr_select(cand_df, ps_df, k=3).collect()
-    assert len(got) == 6
+    got = mmr_select_grouped(cand_df, ps_df, k=3).collect()
+    assert len(got) == 9
     for r in got:
         want_id, want_score = expect[(r["query_id"], r["rank"])]
         assert r["cand_id"] == want_id, (r["query_id"], r["rank"])
         assert r["mmr"] == want_score.quantize(Decimal("0.0000001"))
+    # the negative-sim query must actually pick through a negative max
+    assert any(
+        r["mmr"] > lam * r["simq"] for r in got if r["query_id"] == 3 and r["rank"] > 1
+    )
 
 
 def test_mmr_rejects_bad_params(spark):
     cand = _cand(spark, [(1, 1, _d("0.5"))])
     ps = _ps(spark, [])
     with pytest.raises(ValueError):
-        mmr_select(cand, ps, k=0)
+        mmr_select_grouped(cand, ps, k=0)
     with pytest.raises(ValueError):
-        mmr_select(cand, ps, k=2, lam="0.75")
-
-
-def test_mmr_grouped_parity_with_loop(spark):
-    """mmr_select_grouped (one-shuffle Arrow kernel, the production-volume
-    path) must be BIT-IDENTICAL to the DataFrame loop on every column —
-    both compute the same exact decimals."""
-    import itertools
-
-    from etl_adsbx_spark.operators.similarity import mmr_select_grouped
-
-    cands = {1: [10, 11, 12, 13, 14, 15], 2: [20, 21, 22, 23], 3: [30]}
-    simq = {(q, c): Decimal(f"0.{(c * 37) % 90 + 10:02d}") for q, cs in cands.items() for c in cs}
-    sim = {}
-    for q, cs in cands.items():
-        for a, b in itertools.permutations(cs, 2):
-            key = (min(a, b), max(a, b))
-            sim[(q, a, b)] = Decimal(f"0.{(key[0] * 13 + key[1] * 7) % 100:02d}")
-    cand_df = _cand(spark, [(q, c, simq[(q, c)]) for q, cs in cands.items() for c in cs])
-    ps_df = _ps(spark, [(q, a, b, s) for (q, a, b), s in sim.items()])
-    loop = {(r["query_id"], r["rank"]): (r["cand_id"], r["simq"], r["mmr"])
-            for r in mmr_select(cand_df, ps_df, k=4).collect()}
-    grouped = {(r["query_id"], r["rank"]): (r["cand_id"], r["simq"], r["mmr"])
-               for r in mmr_select_grouped(cand_df, ps_df, k=4).collect()}
-    assert grouped == loop
-    # query 3 has one candidate: both paths emit exactly rank 1 for it
-    assert (3, 1) in grouped and (3, 2) not in grouped
-
-
-def test_mmr_grouped_parity_negative_pair_sims(spark):
-    """Regression: real embedding cosines go NEGATIVE. The loop's
-    diversity term is max-agg over the present pair sims (coalesce 0 only
-    when none exist), so a picked set whose sims to a candidate are all
-    negative yields a NEGATIVE diversity term (boosting that candidate).
-    The grouped kernel originally started its max at Decimal(0), clamping
-    negatives — caught against the sf0.01 oracle when the graded
-    mmr_rerank row switched to the grouped path."""
-    import itertools
-
-    from etl_adsbx_spark.operators.similarity import mmr_select_grouped
-
-    cands = {1: [10, 11, 12, 13]}
-    simq = {(1, c): Decimal(f"0.{(c * 37) % 90 + 10:02d}") for c in cands[1]}
-    sim = {}
-    for a, b in itertools.permutations(cands[1], 2):
-        key = (min(a, b), max(a, b))
-        # mix of negative and positive pair sims, deterministic
-        mag = Decimal(f"0.{(key[0] * 13 + key[1] * 7) % 100:02d}")
-        sim[(1, a, b)] = -mag if (key[0] + key[1]) % 2 else mag
-    cand_df = _cand(spark, [(q, c, s) for (q, c), s in simq.items()])
-    ps_df = _ps(spark, [(q, a, b, s) for (q, a, b), s in sim.items()])
-    loop = {(r["query_id"], r["rank"]): (r["cand_id"], r["simq"], r["mmr"])
-            for r in mmr_select(cand_df, ps_df, k=4).collect()}
-    grouped = {(r["query_id"], r["rank"]): (r["cand_id"], r["simq"], r["mmr"])
-               for r in mmr_select_grouped(cand_df, ps_df, k=4).collect()}
-    assert grouped == loop
-    # at least one selected rank must carry a NEGATIVE diversity max
-    # (mmr > lam*simq is only possible when the clamped kernel would
-    # have differed), so the case actually exercises the regression
-    lam = Decimal("0.7")
-    assert any(
-        mmr > (lam * sq).quantize(Decimal("0.0000001"))
-        for (_, rank), (_, sq, mmr) in grouped.items()
-        if rank > 1
-    )
+        mmr_select_grouped(cand, ps, k=2, lam="0.75")

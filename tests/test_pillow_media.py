@@ -19,9 +19,9 @@ from PIL import Image  # noqa: E402
 
 from etl_adsbx_spark.operators.multimodal import (  # noqa: E402
     extract_features,
+    media_kernels_pass,
     phash_images,
     pillow_decode,
-    resize_media,
     stdlib_decode,
 )
 
@@ -76,7 +76,7 @@ def _media_frame(spark, rows):
 
 
 def test_spark_pipeline_over_png_and_jpeg(spark):
-    """extract_features / resize_media with the Pillow kernel over real
+    """extract_features / media_kernels_pass with the Pillow kernel over real
     compressed payloads: decoded byte counts are the raster size (mime-
     independent), not the container size."""
     arr = _rgb()
@@ -92,9 +92,11 @@ def test_spark_pipeline_over_png_and_jpeg(spark):
              extract_features(media, decode_fn=pillow_decode).collect()}
     assert feats[1]["n_bytes"] == feats[2]["n_bytes"] == w * h * 3
     resized = {r["media_id"]: r for r in
-               resize_media(media, target_bytes=256,
-                            decode_fn=pillow_decode).collect()}
-    assert all(r["n_bytes_out"] == 256 for r in resized.values())
+               media_kernels_pass(media, target_bytes=256,
+                                  decode_fn=pillow_decode).collect()
+               if r["kernel"] == "resize"}
+    assert len(resized) == 2
+    assert all(r["n_bytes"] == 256 for r in resized.values())
 
 
 def test_phash_invariant_across_reencode(spark):

@@ -454,7 +454,7 @@ PIN_SINGLEPART_ALLOWED = {
 #: (several run their fixpoint at query-CONSTRUCTION time, so they fire
 #: during the registry sweep too); they are test_iterative_step_plan_lint's
 #: jurisdiction with its own per-step allowlists — skip them here.
-ITERATIVE_STEP_OPS = {"pagerank", "hits", "connected_components", "mmr_select"}
+ITERATIVE_STEP_OPS = {"pagerank", "hits", "connected_components"}
 
 
 def test_registry_plan_lint(spark):
@@ -697,12 +697,12 @@ def test_iterative_step_plan_lint(spark):
     must actually FIRE with shuffles visible (a silent hook regression
     would otherwise reduce this test to vacuous truth).
 
-    (mmr_rerank left this list in r11: the graded row now runs the
-    parity-pinned grouped kernel — ONE visible plan the registry lint
-    reads directly; the mmr_select loop twin stays exercised and
-    bit-identical in tests/test_mmr.py. Construction-time pin frames
-    captured by the same hook are the registry lint's job, so only the
-    iterative loop ops are held to the step rules here.)"""
+    (mmr_rerank left this list in r11: the graded row runs the grouped
+    kernel mmr_select_grouped — ONE visible plan the registry lint reads
+    directly, checked against the Python reference in tests/test_mmr.py.
+    Construction-time pin frames captured by the same hook are the
+    registry lint's job, so only the iterative loop ops are held to the
+    step rules here.)"""
     from etl_adsbx_spark import planprobe
     from etl_adsbx_spark.queries import queries
 

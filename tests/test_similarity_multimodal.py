@@ -266,27 +266,30 @@ def test_real_image_decode_runs_in_ci(spark):
     assert decode_media(b"abc", "application/octet-stream") == b"abc"
 
 
+def _kernel_rows(media, kernel, **kw):
+    from etl_adsbx_spark.operators.multimodal import media_kernels_pass
+
+    return media_kernels_pass(media, **kw).where(F.col("kernel") == kernel).collect()
+
+
 def test_resize_media_truncates_and_hashes(spark):
     import hashlib
 
-    from etl_adsbx_spark.operators.multimodal import resize_media
-
     d = load_table(spark, SF, "documents").limit(10)
     src = {r["doc_id"]: r["text"] for r in d.collect()}
-    out = resize_media(documents_as_media(d), target_bytes=64).collect()
+    out = _kernel_rows(documents_as_media(d), "resize", target_bytes=64)
     assert len(out) == 10
     for r in out:
         raw = src[r["media_id"]].encode()[:64]
-        assert r["n_bytes_out"] == len(raw)
-        assert r["resized_sha"] == hashlib.sha256(raw).hexdigest()
+        assert r["frame_idx"] == -1
+        assert r["n_bytes"] == len(raw)
+        assert r["payload_hash"] == hashlib.sha256(raw).hexdigest()
 
 
 def test_sample_frames_fanout(spark):
-    from etl_adsbx_spark.operators.multimodal import sample_frames
-
     d = load_table(spark, SF, "documents").limit(10)
     src = {r["doc_id"]: r["text"].encode() for r in d.collect()}
-    out = sample_frames(documents_as_media(d), frame_bytes=16, every_n=2).collect()
+    out = _kernel_rows(documents_as_media(d), "frame", frame_bytes=16, every_n=2)
     by_media: dict[int, list] = {}
     for r in out:
         by_media.setdefault(r["media_id"], []).append(r)
@@ -298,12 +301,10 @@ def test_sample_frames_fanout(spark):
 
 def test_sample_frames_extracts_real_video_frames(spark):
     """Real end-to-end video frame sampling: the stdlib y4m decode returns
-    fsize-aligned raw planes, so sample_frames with frame_bytes = the true
-    plane size IS exact frame extraction — each sampled row's md5 must be
-    the md5 of the actual source frame, not an arbitrary chunk."""
+    fsize-aligned raw planes, so the frame kernel with frame_bytes = the
+    true plane size IS exact frame extraction — each sampled row's md5
+    must be the md5 of the actual source frame, not an arbitrary chunk."""
     import hashlib
-
-    from etl_adsbx_spark.operators.multimodal import sample_frames
 
     vw, vh = 8, 4
     fsize = vw * vh * 3 // 2
@@ -316,8 +317,8 @@ def test_sample_frames_extracts_real_video_frames(spark):
         "media_id long, payload binary, mime string, width long, height long",
     )
     got = {
-        r["frame_idx"]: r["frame_md5"]
-        for r in sample_frames(media, frame_bytes=fsize, every_n=2).collect()
+        r["frame_idx"]: r["payload_hash"]
+        for r in _kernel_rows(media, "frame", frame_bytes=fsize, every_n=2)
     }
     assert got == {
         0: hashlib.md5(frames[0]).hexdigest(),

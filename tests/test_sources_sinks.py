@@ -231,73 +231,6 @@ def test_reconcile_schema_across_generations(spark, tmp_path):
         reconcile_schema(g3, target, on_extra="error")
 
 
-def test_corpus_manifest_roundtrip_and_tamper_detection(spark, tmp_path):
-    import os
-
-    from etl_adsbx_spark.sinks import verify_manifest, write_corpus, write_manifest
-
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}", "train" if i % 2 else "val") for i in range(20)],
-        "doc_id long, text string, split string",
-    )
-    path = str(tmp_path / "corpus")
-    write_corpus(docs, path, partition_by=["split"], files_per_partition=2,
-                 salt_col="doc_id")
-    m = write_manifest(path)
-    assert m["total_rows"] == 20
-    assert set(m["partitions"]) == {"split=train", "split=val"}
-    assert m["partitions"]["split=train"]["n_rows"] == 10
-    # intact tree verifies; a lost file is named in the failure
-    assert verify_manifest(path)["total_rows"] == 20
-    victim_dir = os.path.join(path, "split=val")
-    victim = next(f for f in os.listdir(victim_dir) if f.endswith(".parquet"))
-    os.remove(os.path.join(victim_dir, victim))
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError, match="split=val"):
-        verify_manifest(path)
-
-
-def test_write_corpus_atomic_publish_and_crash_recovery(spark, tmp_path):
-    """Atomic publish: the final path appears complete with a verified
-    manifest; a leftover staging dir from a 'crashed' writer is replaced;
-    re-publishing swaps the tree without leaving partials."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from etl_adsbx_spark.sinks import verify_manifest, write_corpus_atomic
-    from etl_adsbx_spark.tables import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 2).cast("string").alias("half")
-    )
-    out = str(tmp_path / "corpus")
-    # simulate a crashed earlier attempt
-    os.makedirs(out + ".__staging__/garbage", exist_ok=True)
-    m1 = write_corpus_atomic(d, out, partition_by=["half"])
-    assert not os.path.exists(out + ".__staging__")
-    assert verify_manifest(out)["total_rows"] == d.count()
-    assert m1["total_rows"] == d.count()
-    # second publish with fewer rows atomically replaces the first
-    m2 = write_corpus_atomic(d.filter(F.col("doc_id") < 100), out, partition_by=["half"])
-    assert verify_manifest(out)["total_rows"] == m2["total_rows"]
-    assert not os.path.exists(out + ".__prev__")
-    assert spark.read.parquet(out).count() == m2["total_rows"]
-
-
-def test_corpus_diff_tags_added_and_removed(spark):
-    from etl_adsbx_spark.sinks import corpus_diff
-
-    old = spark.range(0, 100).withColumnRenamed("id", "doc_id")
-    new = spark.range(50, 120).withColumnRenamed("id", "doc_id")
-    got = {(r.doc_id, r.change) for r in corpus_diff(old, new).collect()}
-    want = {(i, "added") for i in range(100, 120)} | {
-        (i, "removed") for i in range(0, 50)
-    }
-    assert got == want
-
-
 def _csv_schema():
     from pyspark.sql.types import (
         DoubleType,

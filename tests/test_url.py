@@ -79,7 +79,7 @@ def test_robots_allowed_kernel_semantics(spark):
     unambiguous on purpose: first-match rule order, user-agent group
     selection past a decoy group, protocol-default allow on missing/empty
     robots, and disallow-all."""
-    from etl_adsbx_spark.functions.url import robots_allowed
+    from etl_adsbx_spark.functions.url import robots_allowed_for_hosts
 
     two_group = (
         "User-agent: badbot\nDisallow: /\n\n"
@@ -90,39 +90,44 @@ def test_robots_allowed_kernel_semantics(spark):
     # case the graded construction avoids; pinned here so a swap to a
     # longest-match evaluator is a loud diff, not a silent semantic shift)
     disallow_first = "User-agent: *\nDisallow: /private/\nAllow: /private/pub/\n"
+    texts = [two_group, disallow_first, "User-agent: *\nDisallow: /\n", None, "", "   \n"]
+    robots = spark.createDataFrame(
+        [(f"h{j}.example.com", t) for j, t in enumerate(texts)],
+        "host string, robots_txt string",
+    )
     rows = [
-        (two_group, "https://h.example.com/private/pub/1", True),
-        (two_group, "https://h.example.com/private/2", False),
-        (two_group, "https://h.example.com/public/3", True),
-        (disallow_first, "https://h.example.com/private/pub/4", False),
-        ("User-agent: *\nDisallow: /\n", "https://h.example.com/anything", False),
-        (None, "https://h.example.com/x", True),
-        ("", "https://h.example.com/x", True),
-        ("   \n", "https://h.example.com/x", True),
+        (0, "/private/pub/1", True),
+        (0, "/private/2", False),
+        (0, "/public/3", True),
+        (1, "/private/pub/4", False),
+        (2, "/anything", False),
+        (3, "/x", True),
+        (4, "/x", True),
+        (5, "/x", True),
     ]
     df = spark.createDataFrame(
-        [(i, t, u) for i, (t, u, _) in enumerate(rows)],
-        "i int, robots_txt string, url string",
+        [(i, f"h{j}.example.com", f"https://h{j}.example.com{p}")
+         for i, (j, p, _) in enumerate(rows)],
+        "i int, host string, url string",
     )
-    gate = robots_allowed("etl-adsbx-bot")
+    gate = robots_allowed_for_hosts(robots, "etl-adsbx-bot")
     got = {
         r["i"]: r["ok"]
-        for r in df.select("i", gate("robots_txt", "url").alias("ok")).collect()
+        for r in df.select("i", gate("host", "url").alias("ok")).collect()
     }
     for i, (_, _, want) in enumerate(rows):
         assert got[i] is want, (i, rows[i], got[i])
     # a bot NAMED in the decoy group gets the decoy rules
-    bad = robots_allowed("badbot")
+    bad = robots_allowed_for_hosts(robots, "badbot")
     assert df.where(F.col("i") == 0).select(
-        bad("robots_txt", "url").alias("ok")
+        bad("host", "url").alias("ok")
     ).first()["ok"] is False
 
 
 def test_robots_allowed_for_hosts_broadcast_dim(spark):
-    """The hosts-dim variant: verdicts identical to the per-row-text
-    kernel, with the dim shipped as a broadcast variable — hosts absent
-    from the dim (or with blank text) allow everything, and the plan has
-    NO join."""
+    """The hosts dim ships as a broadcast variable — hosts absent from
+    the dim (or with blank text) allow everything, and the plan has NO
+    join."""
     from etl_adsbx_spark.functions.url import robots_allowed_for_hosts
 
     robots = spark.createDataFrame(
