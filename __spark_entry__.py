@@ -7,7 +7,7 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``etl_adsbx_spark`` (SURVEY.md §7 layout):
 - flagship: etl_adsbx_spark/plans/flagship.py (full CoT pipeline —
-  scan → transform → dedup → broadcast join → dedup → Feature nesting)
+  scan → transform → includes filter → dedup → enrichment → Feature nesting)
 - query registry: etl_adsbx_spark/queries.py (one entry per SURVEY.md §2B
   operator, each with a DuckDB oracle)
 """

@@ -1,16 +1,16 @@
 """Join operators.
 
-The reference's includes join (task.ts:217-240, R22-R24) is a broadcast
-hash lookup with enrichment overrides; generalized here plus the [EXT]
-join shapes the driver tables exercise (as-of, bucketed range). Design
-rule: small side → ``F.broadcast``; large-large equi → let AQE pick
-sort-merge; inequality-only joins get bucketized into equi-joins so they
-scale (a raw theta join is a nested-loop cross product).
+The reference's includes join (task.ts:217-240, R22-R24) is a hash lookup
+with enrichment overrides, planned as a filter and a map probe; here too
+are the [EXT] join shapes the driver tables exercise (as-of, bucketed
+range). Design rule: small side → ``F.broadcast``; large-large equi → let
+AQE pick sort-merge; inequality-only joins get bucketized into equi-joins
+so they scale (a raw theta join is a nested-loop cross product).
 """
 
 from __future__ import annotations
 
-import functools
+import json
 import re
 import weakref
 
@@ -45,12 +45,19 @@ def _require_fixed_offset_tz(df: DataFrame, opname: str) -> None:
         )
 
 
-#: Includes side per includes DataFrame (see ``includes_join``); an entry
-#: goes when its DataFrame does.
-_INCLUDES_SIDES: weakref.WeakKeyDictionary[DataFrame, DataFrame] = weakref.WeakKeyDictionary()
+#: The includes lookup per includes DataFrame (see ``includes_join``): its
+#: ``keep`` and ``inc`` Columns, and the select list per aircraft column
+#: tuple. An entry goes when its DataFrame does.
+_INCLUDES_SIDES: weakref.WeakKeyDictionary[
+    DataFrame, tuple[Column, Column, dict[tuple[str, ...], list[Column]]]
+] = weakref.WeakKeyDictionary()
+
+#: The includes lookup table's type: aircraft id → first-match position
+#: and last truthy overrides.
+_INCLUDES_LUT = f"map<string,struct<{POSITION}:bigint,callsign:string,group:string>>"
 
 
-def _includes_side(includes: DataFrame) -> DataFrame:
+def _includes_side(includes: DataFrame) -> tuple[Column, Column, dict]:
     side = _INCLUDES_SIDES.get(includes)
     if side is None:
         truthy_idx = lambda c: F.when(  # noqa: E731
@@ -63,28 +70,17 @@ def _includes_side(includes: DataFrame) -> DataFrame:
             .groupBy(normalize_key("registration").alias("id"))
             .agg(
                 F.min("_idx").alias(POSITION),
-                F.max_by(F.col("callsign"), truthy_idx("callsign")).alias("_inc_callsign"),
-                F.max_by(F.col("group"), truthy_idx("group")).alias("_inc_group"),
+                F.max_by(F.col("callsign"), truthy_idx("callsign")).alias("callsign"),
+                F.max_by(F.col("group"), truthy_idx("group")).alias("group"),
             )
         )
-        # from Arrow, createDataFrame builds a local relation: scanning it
-        # runs no Python worker, unlike a list of rows
-        local = includes.sparkSession.createDataFrame(agg.toArrow())
-        side = _INCLUDES_SIDES[includes] = F.broadcast(local)
+        lut = {r.pop("id"): r for r in agg.toArrow().to_pylist()}
+        # OptimizeIn makes a list of 10 or more literals a hash set (InSet);
+        # from_json of a literal folds to one map literal
+        keep = F.col("id").isin(list(lut))
+        inc = F.from_json(F.lit(json.dumps(lut)), _INCLUDES_LUT)[F.col("id")]
+        side = _INCLUDES_SIDES[includes] = (keep, inc, {})
     return side
-
-
-@functools.cache
-def _enrichment() -> dict[str, Column]:
-    """Aircraft column → its enriched Column (R23/R24)."""
-    return {
-        # last truthy include.callsign overrides (task.ts:227-229);
-        # _inc_callsign is NULL when no include had a truthy callsign
-        "callsign": F.coalesce(F.col("_inc_callsign"), F.col("callsign")).alias("callsign"),
-        "metadata": F.col("metadata").withField(
-            "group", F.coalesce(F.col("_inc_group"), F.col("metadata.group"))
-        ).alias("metadata"),
-    }
 
 
 def includes_join(
@@ -109,20 +105,38 @@ def includes_join(
     Spark form: pre-aggregate the includes to one row per key —
     ``min(_idx)`` for the first-match position, ``max_by(field, idx-if-
     truthy)`` for the last truthy override (max_by ignores NULL ordering
-    keys, so rows with falsy fields never win) — then one broadcast inner
-    join on ``id``. Because the side is unique per key the join cannot fan
-    out, so ``aircraft`` unique per id gives output unique per id.
+    keys, so rows with falsy fields never win) — and collect it as a
+    lookup table. The join is then two Columns, with no join node: a
+    filter ``id IN (keys)`` and a probe of the table as a map literal.
+    The table is unique per key, so ``aircraft`` unique per id gives
+    output unique per id.
 
-    The side comes from configuration (task.ts:26-61) and is O(10²) rows,
-    so it is aggregated and collected once per ``includes`` DataFrame and
-    kept as a local relation: later calls with the same DataFrame plan no
-    aggregate and run no shuffle for it. ``includes`` is therefore read
-    once; pass a new DataFrame for a new includes list.
+    The includes are configuration (task.ts:26-61) with O(10²) rows, so
+    they are aggregated and collected once per ``includes`` DataFrame:
+    later calls with the same DataFrame plan no aggregate and run no job
+    for them. ``includes`` is therefore read once; pass a new DataFrame
+    for a new includes list. The filter is a hash-set probe, O(1) per
+    row, and reads only ``id``: under ``last_wins`` Catalyst pushes it
+    below the dedup's aggregate, so the dedup and its shuffle see only
+    included ids. The map probe is linear in the includes size, but it
+    runs only on the rows that survive the dedup and the filter.
     """
-    enrich = _enrichment()
-    return aircraft.join(_includes_side(includes), "id").select(
-        *[enrich.get(c, c) for c in aircraft.columns], POSITION
-    )
+    keep, inc, selects = _includes_side(includes)
+    columns = tuple(aircraft.columns)
+    select = selects.get(columns)
+    if select is None:
+        enrich = {
+            # last truthy include.callsign overrides (task.ts:227-229);
+            # the table's callsign is NULL when no include had a truthy one
+            "callsign": F.coalesce(inc["callsign"], F.col("callsign")).alias("callsign"),
+            "metadata": F.col("metadata").withField(
+                "group", F.coalesce(inc["group"], F.col("metadata.group"))
+            ).alias("metadata"),
+        }
+        select = selects[columns] = [
+            *[enrich.get(c, c) for c in columns], inc[POSITION].alias(POSITION)
+        ]
+    return aircraft.filter(keep).select(*select)
 
 
 def asof_join(

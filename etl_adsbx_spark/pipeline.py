@@ -4,21 +4,26 @@ re-expressed as one declarative plan.
     ingest (schema-validated)                      R1-R4
       → row transform (one `select`, codegen'd)    R5-R20
       → last-write-wins dedup per id               R21
-      → includes broadcast join + enrichment       R22-R24
+      → includes lookup filter + enrichment        R22-R24
       → FeatureCollection position per id          R25/R26
       → Feature nesting / FeatureCollection sink   R20/R28
 
-Catalyst fuses R5-R20 into a single narrow stage; the only shuffle is the
-last-wins keyed dedup (hash agg, map-side partial); the includes join is
-a broadcast of a local relation built once per includes DataFrame. There
-is no output dedup: last-wins leaves one row per id and the includes side
-is unique per key, so the reference's first-wins Set guard
-(task.ts:235-238, 244-247) never drops a row. What the guard fixes is the
-output order, which ``control`` emits as the ``POSITION`` column and the
-sinks order by.
+Catalyst fuses R5-R20 into a single narrow stage. The includes lookup is
+no join: a filter ``id IN (keys)`` and a probe of a map literal, built
+once per includes DataFrame (``includes_join``). The filter reads only
+the dedup key, so Catalyst pushes it under the last-wins aggregate: the
+dedup sees only included ids. The only possible shuffle is that keyed
+dedup's (hash or sort agg, map-side partial), and a tick has none: its
+payload is one partition (``fetch_batch``), which already satisfies the
+aggregate's distribution, so a tick is one job of one task. There is no
+output dedup: last-wins leaves one row per id and the lookup is unique
+per key, so the reference's first-wins Set guard (task.ts:235-238,
+244-247) never drops a row. What the guard fixes is the output order,
+which ``control`` emits as the ``POSITION`` column and the sinks order
+by.
 
 At 100 TB this plan holds: dedup keys (aircraft ids) are
-high-cardinality/low-skew, and the dimension side is O(10²) rows.
+high-cardinality/low-skew, and the includes are O(10²) rows.
 """
 
 from __future__ import annotations
@@ -90,7 +95,7 @@ def control(
     if includes is not None and filtering:
         # R21: Map-upsert — last row per id in ingestion order wins
         # (task.ts:136); R22-R25: the position is the first matching
-        # include's (quirk #5), which the join emits
+        # include's (quirk #5), which the includes lookup emits
         return includes_join(last_wins(feats, "id", "_idx"), includes)
     # ADSBX_INCLUDES_FILTERING=false branch (task.ts:241-249): the includes
     # list is NOT consulted at all — every deduped feature passes through

@@ -4,12 +4,12 @@ The reference pipeline needs an observation stream; the driver test data
 has one — ``events``. We map it deterministically onto the ADS-B
 observation schema (each user is an "aircraft", each event an observation
 tick), then run the REAL pipeline: schema'd scan → R5-R20 transform →
-last-write-wins dedup (R21) → includes broadcast join + enrichment
-(R23/R24) → first-wins output dedup (R25) → Feature assembly (R20).
+last-write-wins dedup (R21) → includes lookup filter + enrichment
+(R23/R24) → output position (R25) → Feature assembly (R20).
 
 Everything downstream of the mapping is exactly the production plan, so the
-smoke check exercises scan / filter / project / broadcast-join / two keyed
-dedups / nested-struct sink in one query.
+smoke check exercises scan / filter / project / the includes hash-set
+filter under a keyed dedup's shuffle / nested-struct sink in one query.
 """
 
 from __future__ import annotations

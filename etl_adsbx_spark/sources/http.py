@@ -18,7 +18,6 @@ belt-and-braces shape exactly rather than picking per-variant.
 
 from __future__ import annotations
 
-import json
 import time
 from collections.abc import Callable
 
@@ -86,12 +85,19 @@ def fetch_batch(
     fetch_fn: Callable[[str, str | None], str] | None = None,
 ) -> DataFrame:
     """One micro-batch: fetch → validate (FAILFAST) → explode to rows with
-    ingestion order. Equivalent to one scheduled reference tick (R29)."""
+    ingestion order. Equivalent to one scheduled reference tick (R29).
+
+    FAILFAST rejects a malformed payload at the batch's first action; only
+    an empty or blank body, which it reads as a null envelope with no
+    rows, is rejected here. The batch is one partition: the payload is
+    one row, so the coalesce moves no data, and the ``SinglePartition``
+    it reports lets a keyed aggregate downstream (``last_wins``) run with
+    no shuffle."""
     fetch = fetch_fn or default_fetch
     payload = fetch(url, token)
-    # sanity: payload must be a JSON object (cheap driver-side pre-check)
-    json.loads(payload)
+    if not payload or payload.isspace():
+        raise ValueError("empty ADSBX response body")
     # from Arrow, createDataFrame builds a local relation: scanning it
     # runs no Python worker, unlike a list of rows
     raw = spark.createDataFrame(pa.table({"value": [payload]}))
-    return parse_envelope(raw, strict=True)
+    return parse_envelope(raw).coalesce(1)

@@ -359,9 +359,11 @@ def _loaded_names(tree: ast.Module) -> set[str]:
 
 
 def test_package_has_no_unused_imports():
-    """``__init__.py`` re-exports and ``from __future__`` are exempt."""
+    """In the package and in ``tests/``; ``__init__.py`` re-exports and
+    ``from __future__`` are exempt."""
+    tests = sorted(glob.glob(os.path.join(REPO, "tests", "*.py")))
     unused = []
-    for path, tree in _package_modules().values():
+    for path, tree in [*_package_modules().values(), *((p, _parse(p)) for p in tests)]:
         if os.path.basename(path) == "__init__.py":
             continue
         used = _loaded_names(tree)

@@ -357,7 +357,6 @@ def test_anomaly_events_flags_injected_spike(spark):
     integer residuals, per-type median/3*MAD gate) — and flag rate must
     be sane (some zeros, not everything flagged)."""
     from decimal import Decimal
-    from statistics import median_low
 
     from etl_adsbx_spark import queries as registry
     from etl_adsbx_spark.tables import load_table

@@ -9,8 +9,6 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-from pyspark.sql import functions as F
-
 from etl_adsbx_spark.operators.joins import (
     interval_overlap_counts,
     interval_overlap_join,

@@ -4,7 +4,6 @@ behavioral quirk in SURVEY.md §2A pinned on the hand-written fixtures."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_adsbx_spark.fixtures import BATCH_TIME, aircraft_df, includes_df
 from etl_adsbx_spark.pipeline import control, to_features, transform

@@ -14,10 +14,7 @@ import zlib
 
 import pytest
 
-from etl_adsbx_spark.operators.multimodal import (
-    png_decode_rgb,
-    stdlib_decode,
-)
+from etl_adsbx_spark.operators.multimodal import png_decode_rgb
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 _CH = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -167,8 +164,6 @@ def test_png_through_media_operators(spark):
     and phash_images with the DEFAULT kernel (stdlib in this container),
     and the phash of a PNG equals the phash of the SAME image shipped as
     PPM — decode output is format-independent RGB."""
-    from pyspark.sql import functions as F
-
     from etl_adsbx_spark.operators.multimodal import (
         extract_features,
         phash_images,

@@ -7,7 +7,6 @@ import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from etl_adsbx_spark.functions import scalar as S
 

@@ -207,14 +207,15 @@ def test_global_running_sum_matches_naive(spark, num_parts):
 
 def test_flagship_pipeline_plan_shape(spark):
     """Pin the flagship pipeline's physical plan (SURVEY §3.4 lifecycle
-    claim): the includes dimension joins as exactly ONE BroadcastHashJoin,
-    and the whole pipeline runs on ONE hash-partition shuffle — the
-    id-keyed last-wins dedup. The includes pre-aggregate is built once,
-    before the plan, as a local relation, so the broadcast side has no
-    shuffle, and there is no output dedup (pipeline.py). No sort-merge
-    join, no cartesian/nested-loop anywhere. A regression that
-    adds a shuffle or demotes the broadcast at 100 TB would 10× the
-    pipeline cost; this test catches it at sf0.001."""
+    claim): the whole pipeline runs on ONE hash-partition shuffle — the
+    id-keyed last-wins dedup — and the includes lookup is a hash-set
+    filter (``INSET``) below that shuffle, so the dedup and its shuffle
+    see only included ids. The includes were aggregated once, before the
+    plan, into a lookup table, so there is no join of any kind and no
+    broadcast, and there is no output dedup (pipeline.py). A regression
+    that adds a shuffle or a join, or keeps the filter above the dedup,
+    at 100 TB would 10× the pipeline cost; this test catches it at
+    sf0.001."""
     import re
 
     from etl_adsbx_spark.plans.flagship import flagship
@@ -223,12 +224,13 @@ def test_flagship_pipeline_plan_shape(spark):
     df.collect()  # AQE: final plan exists only after execution
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
-    assert len(re.findall("BroadcastHashJoin", final)) == 1, final
-    assert "SortMergeJoin" not in final, final
+    assert "Join" not in final, final
     assert "CartesianProduct" not in final, final
-    assert "BroadcastNestedLoopJoin" not in final, final
+    assert "BroadcastExchange" not in final, final
     assert len(re.findall(r"Exchange hashpartitioning", final)) == 1, final
-    assert len(re.findall(r"BroadcastExchange", final)) == 1, final
+    lines = final.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln)
+    assert any("Filter" in ln and " INSET " in ln for ln in lines[exchange + 1:]), final
 
 
 def test_asof_join_deterministic_under_repartition(spark):

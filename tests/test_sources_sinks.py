@@ -9,6 +9,8 @@ import json
 import pytest
 from pyspark.sql.types import StructType
 
+from etl_adsbx_spark.fixtures import includes_df
+from etl_adsbx_spark.pipeline import control, to_features
 from etl_adsbx_spark.schemas import (
     ADSB_SCHEMA,
     ENVELOPE_SCHEMA,
@@ -41,10 +43,20 @@ def test_parse_envelope_strict(spark):
     assert rows[0]["r"] == "N1" and rows[1]["hex"] == "ae2"
 
 
-def test_parse_envelope_failfast_aborts(spark):
-    raw = spark.createDataFrame([(BAD,)], "value string")
+@pytest.mark.parametrize("body", [
+    GOOD[: len(GOOD) // 2], "not json", "[]", '{"ac":"nope"}', "", "  ",
+], ids=["truncated", "not-json", "array", "ac-not-array", "empty", "blank"])
+def test_parse_envelope_failfast_aborts(spark, body):
+    """A malformed body aborts the tick no later than its first action,
+    ``submit``'s collect (R4, FAILFAST). FAILFAST reads an empty or blank
+    body as a null envelope with no rows, so ``fetch_batch`` rejects
+    those itself."""
+    def post(_doc):
+        pytest.fail("posted a FeatureCollection for a malformed body")
+
     with pytest.raises(Exception):
-        parse_envelope(raw, strict=True).collect()
+        aircraft = fetch_batch(spark, "x", fetch_fn=lambda _url, _token: body)
+        submit(to_features(control(aircraft, includes_df(spark))), post)
 
 
 def test_permissive_quarantine(spark):

@@ -9,6 +9,8 @@ import json
 import time
 import uuid
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from etl_adsbx_spark import pipeline
@@ -107,51 +109,44 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
 
 
-def _subtree(plan: str, node: str) -> list[str]:
-    """Lines of the plan tree under the first ``node``."""
-    lines = plan.splitlines()
-    at = next(i for i, ln in enumerate(lines) if node in ln)
-    depth = lines[at].index(node)
-    below = []
-    for ln in lines[at + 1:]:
-        if len(ln) - len(ln.lstrip(" :|+-")) <= depth:
-            break
-        below.append(ln)
-    return below
-
-
 def test_warm_tick_is_one_action(spark):
-    """A warm tick (fetch → control → to_features → submit) runs at most
-    3 jobs: last-wins' shuffle map stage, the includes broadcast and the
-    one collect. Its plan has one shuffle and no aggregate over the
-    includes, which were aggregated once."""
+    """A warm tick (fetch → control → to_features → submit) runs one job:
+    the collect. The payload is one partition, so last-wins' aggregate
+    needs no shuffle, and the includes lookup is a filter and a map probe,
+    with no join and no broadcast. The filter reads only ``id``, so it
+    sits under the dedup's aggregate; with 10 or more includes keys it is
+    a hash set (``INSET``)."""
     from etl_adsbx_spark.schemas import ADSB_FIELDS
 
     names = [f.name for f in ADSB_FIELDS]
     payload = json.dumps({"msg": "No error", "ac": [
         {k: v for k, v in zip(names, row[1:]) if v is not None} for row in AIRCRAFT_ROWS
     ]})
-    includes = includes_df(spark)
-
-    def tick() -> tuple:
-        aircraft = fetch_batch(spark, "x", fetch_fn=lambda _url, _token: payload)
-        feats = to_features(control(aircraft, includes, batch_time=BATCH_TIME))
-        return feats, submit(feats, lambda _doc: None)
-
-    tick()
     sc = spark.sparkContext
-    group = f"tick-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "warm tick")
-    try:
-        feats, n = tick()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert n == 3
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
-    feats.collect()  # AQE: the final plan exists only after execution
-    plan = _final_plan(feats)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert not any("Aggregate" in ln for ln in _subtree(plan, "BroadcastExchange")), plan
+    for extra, probe in ((0, " IN ("), (10, " INSET ")):
+        padding = [(100 + i, "EMS", None, f"N{i}PAD", "") for i in range(extra)]
+        includes = spark.createDataFrame([*INCLUDES_ROWS, *padding], INCLUDES_SCHEMA)
+
+        def tick() -> tuple:
+            aircraft = fetch_batch(spark, "x", fetch_fn=lambda _url, _token: payload)
+            feats = to_features(control(aircraft, includes, batch_time=BATCH_TIME))
+            return feats, submit(feats, lambda _doc: None)
+
+        tick()
+        group = f"tick-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "warm tick")
+        try:
+            feats, n = tick()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert n == 3
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        feats.collect()  # AQE: the final plan exists only after execution
+        plan = _final_plan(feats)
+        assert "Exchange" not in plan and "Join" not in plan, plan
+        # one branch, no join: a node printed below another runs under it
+        lookup = [ln for ln in plan.splitlines() if "Filter" in ln and probe in ln]
+        assert lookup and plan.index(lookup[0]) > plan.index("Aggregate"), plan
 
 
 def test_cached_columns_match_fresh(spark):
@@ -195,3 +190,88 @@ def test_new_includes_dataframe_is_not_stale(spark):
     changed = [(0, "EMS", "OTHER", "N100AA", "Regional"), (1, "FIRE", None, "N500YY", "Fire")]
     after = enrichment(spark.createDataFrame(changed, INCLUDES_SCHEMA))
     assert after == {"n100aa": ("OTHER", "Regional"), "n500yy": ("", "Fire")}
+
+
+#: Characters the includes' strings are drawn from: quotes and backslashes
+#: the lookup table's JSON must escape, control characters, non-ASCII and
+#: astral characters, with upper/lower-case pairs among them.
+_CHARS = 'aZ0-"\\\x00\x01\n\x7féÉжЖß✈😀𐐀𐐨'
+
+_text = st.text(st.sampled_from(_CHARS), min_size=1, max_size=6)
+_callsign = st.one_of(st.none(), st.just(""), _text)
+_group = st.one_of(st.just(""), _text)  # not nullable in INCLUDES_SCHEMA
+_variant = st.tuples(
+    st.sampled_from((str, str.upper, str.lower, str.swapcase)),
+    st.sampled_from(("", " ", "  ")),
+    st.sampled_from(("", " ")),
+)
+
+
+def _key(registration: str) -> str:
+    # lower(trim(x)) (task.ts:142, 221) with Spark's trim, which strips
+    # spaces only; the generator pads with spaces only
+    return registration.strip(" ").lower()
+
+
+@st.composite
+def _includes_case(draw):
+    """Base registrations; 0, fewer than 10 or more than 10 includes rows
+    that name them in any case and padding, or have a falsy registration;
+    and aircraft rows that name every base, some twice."""
+    n = draw(st.one_of(st.just(0), st.integers(1, 9), st.integers(11, 14)))
+    bases = draw(st.lists(_text, min_size=max(n, 1), max_size=max(n, 1)))
+
+    def spelled(i: int) -> str:
+        case, left, right = draw(_variant)
+        return f"{left}{case(bases[i])}{right}"
+
+    includes = [
+        (idx, "EMS", draw(_callsign),
+         spelled(i) if i >= 0 else draw(st.sampled_from((None, ""))), draw(_group))
+        for idx, i in enumerate(draw(st.lists(
+            st.integers(-1, len(bases) - 1), min_size=n, max_size=n,
+        )))
+    ]
+    again = draw(st.lists(st.integers(0, len(bases) - 1), max_size=6))
+    aircraft = [_ac(idx, r=spelled(i), flight=f"F{idx}")
+                for idx, i in enumerate([*range(len(bases)), *again])]
+    return aircraft, includes
+
+
+def _model(aircraft: list[tuple], includes: list[tuple]) -> dict[str, tuple]:
+    """id → (callsign, group, position) by the reference's loops: the ids
+    Map (task.ts:136-187), then the includes loop (task.ts:217-240)."""
+    r, flight = ADSB_SCHEMA.names.index("r"), ADSB_SCHEMA.names.index("flight")
+    ids: dict[str, dict] = {}
+    for row in aircraft:
+        key = _key(row[r] or row[flight])
+        if key:
+            ids[key] = {"callsign": row[flight].strip(" "), "group": "UNKNOWN"}
+    out: dict[str, int] = {}
+    for idx, _domain, callsign, registration, group in includes:
+        if not registration:
+            continue
+        key = _key(registration)
+        feature = ids.get(key)
+        if feature is None:
+            continue
+        if callsign:
+            feature["callsign"] = callsign
+        if group:
+            feature["group"] = group
+        out.setdefault(key, idx)
+    return {k: (ids[k]["callsign"], ids[k]["group"], pos) for k, pos in out.items()}
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_includes_case())
+def test_includes_lookup_matches_reference_loop(spark, case):
+    aircraft, includes = case
+    flat = control(
+        spark.createDataFrame(aircraft, ADSB_SCHEMA),
+        spark.createDataFrame(includes, INCLUDES_SCHEMA),
+        batch_time=BATCH_TIME,
+    ).select("id", "callsign", "metadata.group", POSITION).collect()
+    got = {row[0]: tuple(row[1:]) for row in flat}
+    assert len(got) == len(flat)
+    assert got == _model(aircraft, includes)
