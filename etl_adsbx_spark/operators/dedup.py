@@ -39,7 +39,12 @@ def last_wins(df: DataFrame, keys: list[str] | str, order_col: str | Column,
     the key's least ``order_col`` under that name, in the same
     aggregation: where a Map first inserted the key, which fixes its
     iteration position while later upserts replace its value
-    (task.ts:242)."""
+    (task.ts:242).
+
+    Plans as a ``SortAggregate`` over a sort by the keys, not a hash
+    aggregate: the ``max_by(struct(...))`` buffer is a struct, which a hash
+    aggregate cannot update in place, so every tick and stream batch sorts
+    its rows by key before deduplicating them."""
     keys = [keys] if isinstance(keys, str) else list(keys)
     order = F.col(order_col) if isinstance(order_col, str) else order_col
     others = [c for c in df.columns if c not in keys]

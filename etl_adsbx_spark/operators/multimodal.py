@@ -67,21 +67,6 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def decode_media(payload: bytes, mime: str) -> bytes:
-    """Decode kernel stub. A real deployment plugs Pillow/ffmpeg here.
-
-    Raises for real media types (libs not installed); for the synthetic
-    octet-stream payloads it is a deterministic identity, which keeps the
-    full pipeline testable.
-    """
-    if mime.startswith(("image/", "audio/", "video/")):
-        raise NotImplementedError(
-            "media decoding requires image/audio libraries not present in this "
-            "container; plug a real decoder into decode_media()"
-        )
-    return payload
-
-
 def pillow_decode(payload: bytes, mime: str) -> bytes:
     """Pillow-backed image decode: raw RGB pixel bytes for ``image/*``
     payloads; everything else delegates to ``stdlib_decode`` (WAV PCM,

@@ -13,9 +13,10 @@ no join: a filter ``id IN (keys)`` and a probe of a map literal, built
 once per includes DataFrame (``includes_join``). The filter reads only
 the dedup key, so Catalyst pushes it under the last-wins aggregate: the
 dedup sees only included ids. The only possible shuffle is that keyed
-dedup's (hash or sort agg, map-side partial), and a tick has none: its
-payload is one partition (``fetch_batch``), which already satisfies the
-aggregate's distribution, so a tick is one job of one task. There is no
+dedup's (a sort aggregate with a map-side partial: ``last_wins`` keeps a
+struct buffer), and a tick has none: its payload is one partition
+(``fetch_batch``), which already satisfies the aggregate's distribution,
+so a tick is one job of one task. There is no
 output dedup: last-wins leaves one row per id and the lookup is unique
 per key, so the reference's first-wins Set guard (task.ts:235-238,
 244-247) never drops a row. What the guard fixes is the output order,

@@ -4,6 +4,15 @@ The engine targets a 1000-executor cluster reading ~100 TB; tests run on
 local[N]. Every setting here is chosen to behave identically in both modes:
 AQE handles partition coalescing / skew at runtime so the static
 ``shuffle.partitions`` is an upper bound, not a tuning knob per query.
+
+Three environment variables shape the local launch: ``SPARK_GRAFT_CPUS``
+(the ``local[N]`` core count, default every core),
+``SPARK_GRAFT_DRIVER_MEM`` (the driver heap ceiling, default
+:func:`default_driver_memory`) and ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` (driver
+JVM options, passed through as given). The JVM commits heap as it grows,
+so a cold start holds only what it uses. The SQL confs set here are runtime
+confs: a caller that needs another shuffle width sets it with
+``spark.conf.set`` on the session.
 """
 
 from __future__ import annotations
@@ -11,8 +20,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
 def _cgroup_limit_files(proc_cgroup: str, root: str) -> list[str]:
@@ -46,9 +53,9 @@ def _host_memory_gb(proc_cgroup: str = "/proc/self/cgroup",
                     cgroup_root: str = "/sys/fs/cgroup") -> int:
     """Usable physical memory in GB: the sysconf total clamped by the
     tightest cgroup memory limit that applies (a memory-limited container
-    on a large host would otherwise derive — and with AlwaysPreTouch
-    eagerly commit — a heap sized to the HOST's RAM and get OOM-killed at
-    startup). A missing or unlimited ("max" / huge sentinel) limit leaves
+    on a large host would otherwise derive a heap sized to the HOST's RAM,
+    and the JVM is OOM-killed once the heap grows past the container's
+    limit). A missing or unlimited ("max" / huge sentinel) limit leaves
     the sysconf total."""
     try:
         total = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
@@ -92,38 +99,6 @@ def default_driver_memory() -> str:
     return f"{min(max(8, int(cpus * 1.5)), max(total_gb // 2, 2))}g"
 
 
-def default_driver_xms() -> str:
-    """Pre-touched heap FLOOR (-Xms): the working set the JVM commits and
-    faults in at STARTUP instead of mid-query. Two measured pathologies on
-    memory-bandwidth-starved hosts (this sandbox zero-fills fresh pages at
-    ~0.1-1 GB/s) motivate it, both r11 findings:
-
-    - lazy heap EXPANSION lands tens of GB of page faults inside whichever
-      queries happen to trigger it — measured 3-10× intermittent stalls on
-      individual benchmarked queries (a 5 s query taking 28-70 s) with GC
-      time healthy;
-    - G1 UNCOMMITS regions after cleanup pauses, so the next heavy query
-      re-pays faults for pages the JVM already owned. Xms is the floor G1
-      never shrinks below, which ends the fault-refault churn.
-
-    16 GB covers the sf0.1 registry working set with margin (the heaviest
-    query family holds ~8 GB committed once pinned blocks are released
-    between runs); ``-Xmx`` stays at :func:`default_driver_memory` so
-    decade probes keep their headroom, paying lazy faults only above the
-    floor. Clamped to the Xmx so small hosts never request Xms > Xmx. An
-    ``-Xms`` in ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` overrides it (get_spark
-    appends those options after this one, and the JVM applies the last
-    flag given)."""
-    xmx = default_driver_memory()
-    try:
-        xmx_gb = int(xmx.rstrip("gG"))
-    except ValueError:
-        # a non-"<N>g" SPARK_GRAFT_DRIVER_MEM override (e.g. "8192m"):
-        # don't second-guess its unit — mirror it as the floor
-        return xmx
-    return f"{min(16, xmx_gb)}g"
-
-
 def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
@@ -139,31 +114,21 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Posting-list explodes (jaccard_prefix_pairs, the tfidf-SimHash
         # composition) build per-partition window/agg state proportional to
         # rows/partition: at a fixed 32 partitions the sf10 probes needed a
-        # hand-raised SPARK_GRAFT_SHUFFLE=256 + 48g heap (BASELINE.md,
-        # round-8 third-decade note). Starting every shuffle fine-grained
-        # and letting AQE COALESCE small stages keeps rows/partition
-        # bounded as data grows with no per-query knob: small workloads
-        # coalesce back to a handful of partitions, explode-heavy stages
-        # keep the fan-out. This is the auto-sizing rule — the env vars
-        # remain as overrides, not requirements.
-        # SPARK_GRAFT_INIT_PARTS overrides (tests pin it to the shuffle
-        # count: hypothesis property suites run hundreds of FEW-ROW Spark
-        # jobs where the fine-grained start is pure per-job overhead —
-        # measured ~3-4× suite slowdown; the data-sized runs that need the
-        # fan-out — perfbench, decade probes — keep the 256 default).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INIT_PARTS",
-                str(max(256, DEFAULT_SHUFFLE_PARTITIONS)),
-            ),
-        )
+        # hand-raised spark.sql.shuffle.partitions=256 + 48g heap
+        # (BASELINE.md, round-8 third-decade note). Starting every shuffle
+        # fine-grained and letting AQE COALESCE small stages keeps
+        # rows/partition bounded as data grows with no per-query knob: small
+        # workloads coalesce back to a handful of partitions, explode-heavy
+        # stages keep the fan-out. The pytest session sets it to 32 on its
+        # session: its hypothesis suites run hundreds of few-row jobs where
+        # the fine-grained start is pure per-job overhead.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # The ContextCleaner only unpersists an RDD once the DRIVER JVM
         # garbage-collects its handle; its safety-net System.gc() fires
@@ -193,18 +158,9 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", default_driver_memory())
-        # Heap floor + pre-touch: fault the working set in at startup
-        # (outside any measured region) rather than inside queries — see
-        # default_driver_xms for the measured stall pathology. Applied at
-        # JVM launch; a no-op when an existing session is reused.
-        # User-supplied options (SPARK_GRAFT_DRIVER_JAVA_OPTS — e.g. GC
-        # logging flags) come AFTER the built-in ones: the JVM applies the
-        # last flag given, so a user -Xms or -XX:-AlwaysPreTouch wins.
-        .config(
-            "spark.driver.extraJavaOptions",
-            (f"-Xms{default_driver_xms()} -XX:+AlwaysPreTouch "
-             + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")).strip(),
-        )
+        # Applied at JVM launch; a no-op when an existing session is reused.
+        .config("spark.driver.extraJavaOptions",
+                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

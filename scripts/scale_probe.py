@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Scale probe: measure the heavy operators at sf0.1 AND sf1 (10x) in one
-process, median of N runs each, and report the scaling ratio per query.
+process, median of N complete runs each (``probe_registry.timed``: the
+noop sink, failures recorded as ``FAIL <type>``), and report the scaling
+ratio per query.
 
 A ratio near 10 (the data grew 10x) means near-linear scaling; well below
 10 means fixed overhead still dominates at sf0.1 (expected for the
@@ -19,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -27,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_adsbx_spark import queries as registry  # noqa: E402
 from etl_adsbx_spark.session import get_spark  # noqa: E402
+from probe_registry import N_RUNS, WARM_DIR, timed  # noqa: E402
 
 PROBE = [
     # the heavy dedup/similarity/packing set (the original probe)
@@ -125,8 +127,6 @@ SPECIAL = {
     "semantic_dedup_scaled": _semantic_dedup_scaled,
 }
 
-N_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-
 #: the heavy legs spill hard (tfidf at sf10 spills 40+ GB; one r10 run
 #: died on ENOSPC worsened by a STALE blockmgr dir from a killed run —
 #: BASELINE.md r10 notes). Refuse loudly up front instead of dying
@@ -201,28 +201,15 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_PROBE")
     probe = [q for q in PROBE if q in set(only.split(","))] if only else PROBE
 
-    # warm codegen/JVM at the smallest SF
+    out: dict[str, dict] = {}
     for name in probe:
-        qs[name](spark, "/root/testdata/sf0.001").count()
-
-    def timed(name: str, sf_dir: str) -> float:
-        samples = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            samples.append(time.perf_counter() - t0)
-        return round(statistics.median(samples), 3)
-
-    out: dict[str, dict[str, float]] = {}
-    for name in probe:
-        t01 = timed(name, sf01_dir)
-        t1 = timed(name, sf1_dir)
-        out[name] = {
-            "sf0.1": t01,
-            "sf1": t1,
-            "ratio": round(t1 / t01, 2) if t01 > 0 else float("nan"),
-        }
-        print(f"## {name}: sf0.1={t01}s sf1={t1}s ratio={out[name]['ratio']}", file=sys.stderr)
+        timed(qs[name], spark, WARM_DIR, runs=1)  # warm-up: codegen + JIT
+        t01 = timed(qs[name], spark, sf01_dir)
+        t1 = timed(qs[name], spark, sf1_dir)
+        out[name] = {"sf0.1": t01, "sf1": t1}
+        if isinstance(t01, float) and isinstance(t1, float):
+            out[name]["ratio"] = round(t1 / max(t01, 0.001), 2)
+        print(f"## {name}: {out[name]}", file=sys.stderr, flush=True)
     print(json.dumps({"metric": "scale_probe", "runs": N_RUNS, "queries": out}))
 
 

@@ -7,17 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Must precede the session import: DEFAULT_SHUFFLE_PARTITIONS binds at
-# module import. 8 shuffle partitions for the shared test session — batch
-# results are partitioning-invariant by the registry's exactness contracts
-# (and test_determinism re-checks them at 7 partitions in its own
-# session), while STATEFUL STREAMING tests pay per state partition per
-# micro-batch (state store open/commit + a Python state worker each):
-# measured r12, the stateful-last-position drain drops 11.8 → 7.3 s going
-# 32 → 8. Tests that need a specific count pin their own sessions.
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "8")
-
-from etl_adsbx_spark.session import get_spark  # noqa: E402
+from etl_adsbx_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -26,19 +16,18 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    # hypothesis suites run hundreds of tiny Spark jobs: the production
-    # fine-grained AQE start (initialPartitionNum=256, session.py) is
-    # pure per-job overhead at that shape — pin tests to the shuffle
-    # count; results are partitioning-invariant by the exactness
-    # contracts (and the decade probes/perfbench exercise the 256 default)
-    os.environ.setdefault("SPARK_GRAFT_INIT_PARTS", "32")
-    # the pre-touched heap floor (session.default_driver_xms) sizes for
-    # the sf0.1 registry working set; at sf0.001 the suite never needs it —
-    # keep the test JVM's cold start fast (same rationale as INIT_PARTS).
-    # User options follow the built-in ones, so this -Xms is the one the
-    # JVM applies.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-Xms2g")
     s = get_spark("etl-adsbx-spark-tests")
+    # 8 shuffle partitions: batch results are partitioning-invariant by the
+    # registry's exactness contracts (and test_determinism re-checks them at
+    # 7), while STATEFUL STREAMING tests pay per state partition per
+    # micro-batch (state store open/commit + a Python state worker each):
+    # measured r12, the stateful-last-position drain drops 11.8 → 7.3 s
+    # going 32 → 8. AQE starts each shuffle at 32, not 256: hypothesis
+    # suites run hundreds of tiny Spark jobs, where the fine-grained start
+    # is pure per-job overhead (~3-4× suite time). Tests that need other
+    # widths set and restore their own.
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
     yield s
 
 
@@ -48,11 +37,10 @@ def _release_pins_between_tests():
 
     Operators pin shared subtrees with lazy ``localCheckpoint`` via
     ``planprobe.pin``; perfbench frees those blocks between ops, but a
-    pytest session never released them — over ~600 tests
-    the dead blocks pile up in the BlockManager, the driver heap grows
-    past the 2g test floor, and on this memory-bandwidth-starved host
-    the page-fault churn slows LATER tests by up to ~10×
-    (test_cc_incremental_matches_full_recompute: 610 s at suite position
+    pytest session never released them — over ~600 tests the dead blocks
+    pile up in the BlockManager, the driver heap keeps growing, and on a
+    memory-bandwidth-starved host the page-fault churn slows LATER tests
+    by up to ~10× (test_cc_incremental_matches_full_recompute: 610 s at suite position
     ~540 vs 66 s in isolation, measured r12 — the r11 query-stall
     pathology inside pytest). Releasing after EACH test is safe: no
     fixture carries a pinned DataFrame across tests (module-scoped

@@ -175,10 +175,7 @@ TEST_ONLY = {
         "operators.sampling.weighted_mix",
     ),
     "§2B 'Skew diagnostic report'": ("operators.skew.skew_report",),
-    "§2B 'Multimodal': the media schema and the codec-less decode stub": (
-        "operators.multimodal.MEDIA_SCHEMA",
-        "operators.multimodal.decode_media",
-    ),
+    "§2B 'Multimodal': the media schema": ("operators.multimodal.MEDIA_SCHEMA",),
     "§2B 'Image near-dup (perceptual hash)'": (
         "operators.multimodal.PHASH_SCHEMA",
         "operators.multimodal._dct_matrix",

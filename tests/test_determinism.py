@@ -7,7 +7,7 @@ counts, AQE coalescing decisions, task retries. Every query whose
 implementation touches a layout-sensitive construct (round-robin
 repartition, spark_partition_id, max_by ties, iterative fixpoints, salted
 aggregation, hash sampling) is re-run here under an aggressively different
-physical configuration (7 shuffle partitions instead of 32, 64 KiB input
+physical configuration (7 shuffle partitions instead of 8, 64 KiB input
 splits instead of 128 MiB, AQE disabled entirely) and must produce the
 byte-identical normalized result. AQE-off specifically exercises the
 global_running_sum exchange-reuse hazard (operators/agg.py:76-85): with

@@ -1,5 +1,5 @@
-"""Session factory: heap sizing under cgroup limits and the order of the
-driver JVM's options."""
+"""Session factory: heap sizing under cgroup limits, the driver JVM's
+launch options and the shared test session's shuffle widths."""
 
 from __future__ import annotations
 
@@ -38,14 +38,24 @@ def test_nested_cgroup_limit_clamps_host_memory(tmp_path):
     assert _host_memory_gb(proc, root) == unbounded
 
 
-def test_user_java_opts_follow_builtin_flags(spark):
-    """SPARK_GRAFT_DRIVER_JAVA_OPTS is appended after the built-in heap
-    floor, so the JVM applies the user's -Xms (the last flag given)."""
-    user_xms = [o for o in shlex.split(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
-                if o.startswith("-Xms")]
-    assert user_xms, "the test session sets -Xms through SPARK_GRAFT_DRIVER_JAVA_OPTS"
+def test_driver_jvm_gets_no_heap_options_but_the_users(spark):
+    """The driver JVM commits heap lazily: no -Xms and no AlwaysPreTouch
+    reach it unless SPARK_GRAFT_DRIVER_JAVA_OPTS passes them, and every
+    option in that variable does reach it."""
+    user = shlex.split(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
     mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     args = list(mx.getInputArguments())
-    xms = [a for a in args if a.startswith("-Xms")]
-    assert len(xms) >= 2, args  # the built-in floor, then the user's
-    assert xms[-1] == user_xms[-1], args
+    assert [o for o in user if o not in args] == [], args
+    added = [a for a in args if a.startswith("-Xms") or "AlwaysPreTouch" in a]
+    assert [a for a in added if a not in user] == [], args
+
+
+def test_test_session_pins_small_shuffles(spark):
+    """get_spark launches with 32 shuffle partitions and AQE's 256-way
+    initial split; the shared test session narrows both (conftest), since
+    the fine-grained start costs the suite ~3-4× its time."""
+    launch = spark.sparkContext.getConf()
+    assert launch.get("spark.sql.shuffle.partitions") == "32"
+    assert launch.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "256"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "32"

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_adsbx_spark.operators.multimodal import (
-    decode_media,
     documents_as_media,
     extract_features,
 )
@@ -116,11 +115,6 @@ def test_multimodal_plumbing(spark):
     assert len(r["payload_sha"]) == 64
     assert r["n_bytes"] > 0
     assert 0 < r["feat_mean"] < 256
-
-
-def test_decode_media_stub_raises_for_real_media():
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x89PNG", "image/png")
 
 
 def _xor_decode(payload: bytes, mime: str) -> bytes:
@@ -263,7 +257,7 @@ def test_real_image_decode_runs_in_ci(spark):
         assert default_decode_kernel().__name__ == "stdlib_decode"
         with pytest.raises(Exception, match="Pillow|codec|kernel"):
             stdlib_decode(b"\xff\xd8\xff", "image/jpeg")
-    assert decode_media(b"abc", "application/octet-stream") == b"abc"
+    assert stdlib_decode(b"abc", "application/octet-stream") == b"abc"
 
 
 def _kernel_rows(media, kernel, **kw):
