@@ -125,9 +125,9 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         # fine-grained and letting AQE COALESCE small stages keeps
         # rows/partition bounded as data grows with no per-query knob: small
         # workloads coalesce back to a handful of partitions, explode-heavy
-        # stages keep the fan-out. The pytest session sets it to 32 on its
-        # session: its hypothesis suites run hundreds of few-row jobs where
-        # the fine-grained start is pure per-job overhead.
+        # stages keep the fan-out. tests/conftest.py narrows it to 32 for the
+        # pytest session: its hypothesis suites run hundreds of few-row jobs
+        # where the fine-grained start is pure per-job overhead.
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # The ContextCleaner only unpersists an RDD once the DRIVER JVM
